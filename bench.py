@@ -199,54 +199,31 @@ def kg_pipeline_job(spark, replicate: int, dedup: bool = True,
     Returns (n_docs, seconds). n_docs comes from parquet metadata — a
     count() on web_pages would regenerate every HTML blob just to count
     rows."""
-    from pyspark.sql import functions as F
-    from joint_entity_and_relation_extraction_spark.operators import canonicalize as C
-    from joint_entity_and_relation_extraction_spark.operators import extract as X
     from joint_entity_and_relation_extraction_spark.operators import linking as L
     from joint_entity_and_relation_extraction_spark.operators.webpages import web_pages
+    from joint_entity_and_relation_extraction_spark.plans.pipeline import kg_stages
     from joint_entity_and_relation_extraction_spark.sources.io import read_table
 
     n_docs = read_table(spark, SF_DIR, "documents").count() * replicate
     wp = web_pages(spark, SF_DIR, replicate=replicate, mutate=mutate)
     t0 = time.monotonic()
-    ext = X.extract_text(wp)
-    # persist the sentence table: the distinct-inference stage and the
-    # stream join-back both consume it
-    sents = X.split_sentences(X.lang_filter(ext)).persist()
     # distinct-first shape: inference, surface extraction and the
-    # canonical map all derive from the DISTINCT-sentence table
-    # (localCheckpointed inside infer_distinct); only the final triple
-    # stream join+aggregate touches per-replica rows
-    infd = X.infer_distinct(sents)
-    raw_surfaces = X.mention_surfaces(infd)
-    surfaces = (raw_surfaces
-                .select(L.normalize_col(F.col("surface")).alias("alias_norm"))
-                .distinct())
-    resolution = L.resolve_surfaces(surfaces, L.alias_dict(spark, SF_DIR)).persist()
-    labels = C.connected_components(L.resolution_edges(resolution))
-    if dedup:
-        inferred = X.infer(sents, inferred_distinct=infd)
-    else:
-        # scaling-pair configuration: run the model on EVERY sentence of
-        # the stream. The deterministic xK corpus replication collapses
-        # the deduped model stage to the tiny distinct residue (~2% here
-        # vs 30-70% on real Common Crawl), leaving mostly fixed scheduler
-        # latency — which measures Spark's constant, not the engine's
-        # scaling. With dedup off the measured work grows with the corpus
-        # the way the real workload does. The dictionary-side work
-        # (surfaces, linking, canonical map) still derives from the cheap
-        # distinct pass — identical sets either way — so the stream model
-        # output has exactly one consumer and needs no persist. Production
-        # default stays dedup=True (the headline local[N] throughput and
-        # all correctness surfaces use it).
-        inferred = X.infer(sents, dedup=False)
-    canon = C.canonical_triples_by_surface(
-        X.triples_raw(inferred), C.surface_canon_map(resolution, labels),
-        raw_surfaces=raw_surfaces)
-    n_triples = canon.groupBy("subj", "pred", "obj").count().count()
+    # canonical map all derive from the DISTINCT-sentence table; only the
+    # final triple stream join+aggregate touches per-replica rows.
+    # dedup=False is the scaling-pair configuration: it runs the model on
+    # EVERY sentence of the stream. The deterministic xK corpus
+    # replication collapses the deduped model stage to the tiny distinct
+    # residue (~2% here vs 30-70% on real Common Crawl), leaving mostly
+    # fixed scheduler latency — which measures Spark's constant, not the
+    # engine's scaling. With dedup off the measured work grows with the
+    # corpus the way the real workload does. Production default stays
+    # dedup=True (the headline local[N] throughput and all correctness
+    # surfaces use it).
+    g = kg_stages(spark, wp, L.alias_dict(spark, SF_DIR), dedup=dedup)
+    n_triples = g.canon.groupBy("subj", "pred", "obj").count().count()
     dt = time.monotonic() - t0
-    sents.unpersist()
-    resolution.unpersist()
+    for df in g.held:
+        df.unpersist()
     assert n_triples > 0
     return n_docs, dt
 
@@ -312,12 +289,9 @@ def child_stage_attr(master: str) -> None:
     scaling loss lives rather than re-measure the gate (barriers change
     the fused pipeline's overlap). Also runnable standalone:
     `bench.py --stage-attr --master local[N]`."""
-    from pyspark.sql import functions as F
-
-    from joint_entity_and_relation_extraction_spark.operators import canonicalize as C
-    from joint_entity_and_relation_extraction_spark.operators import extract as X
     from joint_entity_and_relation_extraction_spark.operators import linking as L
     from joint_entity_and_relation_extraction_spark.operators.webpages import web_pages
+    from joint_entity_and_relation_extraction_spark.plans.pipeline import kg_stages
     from joint_entity_and_relation_extraction_spark.session import build_session
 
     spark = build_session(master=master, app_name=f"jers-stage-{master}")
@@ -329,31 +303,22 @@ def child_stage_attr(master: str) -> None:
         stages[name] = round(t - t0, 2)
         return t
 
-    wp = web_pages(spark, SF_DIR, replicate=REPLICATE)
+    g = kg_stages(spark, web_pages(spark, SF_DIR, replicate=REPLICATE),
+                  L.alias_dict(spark, SF_DIR), dedup=False)
     t = time.monotonic()
-    sents = X.split_sentences(X.lang_filter(X.extract_text(wp))).persist()
-    sents.count()
+    g.sents.count()
     t = mark("extract_split", t)
-    infd = X.infer_distinct(sents)
-    infd.count()
+    g.infd.count()
     t = mark("dict_infer", t)
-    raw_surfaces = X.mention_surfaces(infd)
-    surfaces = (raw_surfaces
-                .select(L.normalize_col(F.col("surface")).alias("alias_norm"))
-                .distinct())
-    resolution = L.resolve_surfaces(surfaces, L.alias_dict(spark, SF_DIR)).persist()
-    resolution.count()
+    g.resolution.count()
     t = mark("link", t)
-    labels = C.connected_components(L.resolution_edges(resolution))
-    labels.count()
+    g.labels.count()
     t = mark("cc", t)
-    inferred = X.infer(sents, dedup=False).persist()
-    inferred.count()
+    # barrier: canon_agg below reads the stream model's output instead of
+    # re-running it
+    g.inferred.persist().count()
     t = mark("stream_infer", t)
-    canon = C.canonical_triples_by_surface(
-        X.triples_raw(inferred), C.surface_canon_map(resolution, labels),
-        raw_surfaces=raw_surfaces)
-    canon.groupBy("subj", "pred", "obj").count().count()
+    g.canon.groupBy("subj", "pred", "obj").count().count()
     mark("canon_agg", t)
     spark.stop()
     print(json.dumps({"master": master, "stages": stages,

@@ -110,6 +110,9 @@ INFERRED_SCHEMA = StructType([
 
 
 def _infer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Model pass over Arrow batches carrying a ``tokens`` column: the
+    input columns pass through and ``mentions`` / ``relations`` are
+    appended in place (no per-batch frame copy)."""
     # iterator-of-batches: frozen weights materialize once per python worker
     from ..functions import model as M
 
@@ -127,10 +130,9 @@ def _infer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             rels.append(
                 [{"head": int(h), "tail": int(t), "pred": p, "score": sc}
                  for h, t, p, sc in pairs])
-        yield pd.DataFrame({
-            "url": pdf["url"], "sent_id": pdf["sent_id"],
-            "tokens": pdf["tokens"], "mentions": ments, "relations": rels,
-        })
+        pdf["mentions"] = ments
+        pdf["relations"] = rels
+        yield pdf
 
 
 INFERRED_DISTINCT_SCHEMA = StructType([
@@ -138,23 +140,6 @@ INFERRED_DISTINCT_SCHEMA = StructType([
     StructField("mentions", ArrayType(MENTION_STRUCT), False),
     StructField("relations", ArrayType(RELATION_STRUCT), False),
 ])
-
-
-def _infer_distinct_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..functions import model as M
-
-    M.weights()
-    for pdf in batches:
-        ments, rels = [], []
-        for spans, pairs in M.extract_batch(list(pdf["tokens"])):
-            ments.append(
-                [{"start": int(s), "end": int(e), "label": lab, "score": sc}
-                 for s, e, lab, sc in spans])
-            rels.append(
-                [{"head": int(h), "tail": int(t), "pred": p, "score": sc}
-                 for h, t, p, sc in pairs])
-        yield pd.DataFrame({"tokens": pdf["tokens"], "mentions": ments,
-                            "relations": rels})
 
 
 def infer_distinct(sentences: DataFrame,
@@ -180,7 +165,7 @@ def infer_distinct(sentences: DataFrame,
     distinct = (sentences.select("tokens").dropDuplicates(["tokens"])
                 .repartition(n, F.xxhash64("tokens")))
     return distinct.mapInPandas(
-        _infer_distinct_batches,
+        _infer_batches,
         schema=INFERRED_DISTINCT_SCHEMA).localCheckpoint(eager=False)
 
 

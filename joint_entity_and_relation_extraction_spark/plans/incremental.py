@@ -35,6 +35,13 @@ def aggregate_triples(canon_with_ts: DataFrame) -> DataFrame:
     )
 
 
+def triple_write_layout(triples: DataFrame) -> DataFrame:
+    """Pre-write layout of the triples table: partition by pred (low
+    cardinality), spread each pred on hash(subj) so hot predicates don't
+    serialize one writer."""
+    return triples.repartition(F.col("pred"), F.pmod(F.hash("subj"), F.lit(8)))
+
+
 def _combine(existing: DataFrame, delta: DataFrame) -> DataFrame:
     """Monoid-combine two aggregated triple tables."""
     u = existing.unionByName(delta)
@@ -76,9 +83,7 @@ def merge_triple_evidence(spark: SparkSession, table_root: str,
         merged = delta if existing.isEmpty() else _combine(existing, delta)
     else:
         merged = delta
-    merged = merged.repartition(F.col("pred"),
-                                F.pmod(F.hash("subj"), F.lit(8)))
-    il.overwrite_partitions(merged, table_root, ["pred"])
+    il.overwrite_partitions(triple_write_layout(merged), table_root, ["pred"])
     return il.read(spark, table_root, where={"pred": preds})
 
 

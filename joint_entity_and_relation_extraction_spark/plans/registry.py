@@ -17,12 +17,14 @@ from ..operators import curation as CU
 from ..operators import dedup as DD
 from ..operators import extract as X
 from ..operators import graph as GR
+from ..operators import linking as LK
 from ..operators import multimodal as MM
 from ..operators import pandas_ops as PO
 from ..operators import similarity as SIM
 from ..operators import textstats as TS
 from ..operators.webpages import web_pages
 from . import queries as QQ
+from .pipeline import kg_stages
 from .queries import RELATIONAL_ORACLE, RELATIONAL_QUERIES
 
 
@@ -30,92 +32,78 @@ from .queries import RELATIONAL_ORACLE, RELATIONAL_QUERIES
 #     extractor/model; correctness is pinned by the oracle-parity pytest
 #     gates T1–T3 instead) ---------------------------------------------------
 
-def q_kg_web_pages(spark, sf):
-    return web_pages(spark, sf).select("url", "warc_ts", "lang",
-                                       F.length("html").alias("n_html_bytes"))
-
-
-def q_kg_extract_text(spark, sf):
-    return X.extract_text(web_pages(spark, sf)).select(
-        "url", "warc_ts", "lang", "text_sha", "n_chars")
-
-
-def q_kg_sentences(spark, sf):
-    ext = X.lang_filter(X.extract_text(web_pages(spark, sf)))
-    return X.split_sentences(ext).select(
-        "url", "sent_id", "char_start", "char_end",
-        F.size("tokens").cast("int").alias("n_tokens"))
-
-
 _INFER_CACHE: dict = {}
 
 
-def _inferred(spark, sf):
-    """Persisted-and-memoized inference results per (application, sf_dir):
-    several kg_* queries share the expensive extract→infer prefix; the
-    driver runs them back-to-back in one session, so recomputing the
-    model stage per query would triple its correctness-run cost.
+def _release(g) -> None:
+    for df in g.held:
+        try:
+            df.unpersist()
+        except Exception:
+            pass  # context already gone — nothing to release
+
+
+def _stages(spark, sf):
+    """The KG stage graph (pipeline.kg_stages) memoized per (application,
+    sf_dir): the kg_* queries are projections of its frames, and the
+    driver runs them back-to-back in one session, so rebuilding the graph
+    per query would re-run the model stage each time.
 
     Keyed by applicationId, not id(spark): a stopped session's id() can be
     reused by a new SparkSession, which would hand back a DataFrame bound
-    to a dead context. Entries from other applications are evicted (and
-    their cached blocks dropped if the context is still alive) so the
-    cache never outlives one driver run; clear_caches() is the explicit
-    hook for callers that finish early."""
+    to a dead context. Graphs from other applications are evicted (and
+    their held blocks dropped if the context is still alive) so the cache
+    never outlives one driver run; clear_caches() is the explicit hook for
+    callers that finish early."""
     app = spark.sparkContext.applicationId
     key = (app, sf)
     if key not in _INFER_CACHE:
-        for old_key, df in list(_INFER_CACHE.items()):
-            if old_key[0] != app:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass  # context already gone — nothing to release
-                del _INFER_CACHE[old_key]
-        ext = X.lang_filter(X.extract_text(web_pages(spark, sf)))
-        _INFER_CACHE[key] = X.infer(X.split_sentences(ext)).persist()
+        for old_key in [k for k in _INFER_CACHE if k[0] != app]:
+            _release(_INFER_CACHE.pop(old_key))
+        _INFER_CACHE[key] = kg_stages(spark, web_pages(spark, sf),
+                                      LK.alias_dict(spark, sf))
     return _INFER_CACHE[key]
 
 
 def clear_caches() -> None:
-    """Unpersist and drop every memoized inference DataFrame."""
-    for df in _INFER_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+    """Unpersist and drop every memoized stage graph."""
+    for g in _INFER_CACHE.values():
+        _release(g)
     _INFER_CACHE.clear()
 
 
+def q_kg_web_pages(spark, sf):
+    return _stages(spark, sf).pages.select(
+        "url", "warc_ts", "lang", F.length("html").alias("n_html_bytes"))
+
+
+def q_kg_extract_text(spark, sf):
+    return _stages(spark, sf).ext.select(
+        "url", "warc_ts", "lang", "text_sha", "n_chars")
+
+
+def q_kg_sentences(spark, sf):
+    return _stages(spark, sf).sents.select(
+        "url", "sent_id", "char_start", "char_end",
+        F.size("tokens").cast("int").alias("n_tokens"))
+
+
 def q_kg_mentions(spark, sf):
-    return X.mentions(_inferred(spark, sf))
+    return X.mentions(_stages(spark, sf).inferred)
 
 
 def q_kg_triples_raw(spark, sf):
-    return X.triples_raw(_inferred(spark, sf))
+    return _stages(spark, sf).triples_raw
 
 
 def q_kg_links(spark, sf):
-    from ..operators import linking as LK
-
-    inferred = _inferred(spark, sf)
-    return LK.link_mentions(X.mentions(inferred), LK.alias_dict(spark, sf))
+    g = _stages(spark, sf)
+    return LK.link_mentions(X.mentions(g.inferred), g.aliases)
 
 
 def q_kg_canonical_triples(spark, sf):
-    from ..operators import canonicalize as C
-    from ..operators import linking as LK
-
-    inferred = _inferred(spark, sf)
-    surfaces = (X.mentions(inferred).select("surface").distinct()
-                .select(LK.normalize_col(F.col("surface")).alias("alias_norm"))
-                .distinct())
-    resolution = LK.resolve_surfaces(surfaces, LK.alias_dict(spark, sf))
-    labels = C.connected_components(LK.resolution_edges(resolution))
-    canon = C.canonical_triples_by_surface(
-        X.triples_raw(inferred), C.surface_canon_map(resolution, labels))
     return (
-        canon.groupBy("subj", "pred", "obj")
+        _stages(spark, sf).canon.groupBy("subj", "pred", "obj")
         .agg(F.min("subj_norm").alias("subj_name"),
              F.min("obj_norm").alias("obj_name"),
              F.count("*").alias("evidence_count"),
@@ -179,7 +167,7 @@ def q_kg_triple_metrics(spark, sf):
         rows, "url string, sent_id int, subj_surface string, "
         "subj_label string, pred string, obj_surface string, "
         "obj_label string").withColumn("_g", F.lit(1))
-    t = (X.triples_raw(_inferred(spark, sf)).select(*_TRIPLE_KEY_COLS)
+    t = (_stages(spark, sf).triples_raw.select(*_TRIPLE_KEY_COLS)
          .dropDuplicates().withColumn("_s", F.lit(1)))
     # eqNullSafe on every key column (ADVICE r06 low): a NULL key field
     # on either side must still match its counterpart, not silently

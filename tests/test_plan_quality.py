@@ -187,7 +187,7 @@ def test_model_stage_is_not_serialized_by_aqe(spark):
     from joint_entity_and_relation_extraction_spark.operators.webpages import web_pages
 
     from joint_entity_and_relation_extraction_spark.operators.extract import (
-        INFERRED_DISTINCT_SCHEMA, _infer_distinct_batches)
+        INFERRED_DISTINCT_SCHEMA, _infer_batches)
 
     wp = web_pages(spark, SF001)
     sents = X.split_sentences(X.lang_filter(X.extract_text(wp)))
@@ -195,7 +195,7 @@ def test_model_stage_is_not_serialized_by_aqe(spark):
     # checkpointed frame whose plan is an opaque ExistingRDD scan)
     pre = (sents.select("tokens").dropDuplicates(["tokens"])
            .repartition(8, F.xxhash64("tokens"))
-           .mapInPandas(_infer_distinct_batches, schema=INFERRED_DISTINCT_SCHEMA))
+           .mapInPandas(_infer_batches, schema=INFERRED_DISTINCT_SCHEMA))
     assert "REPARTITION_BY_NUM" in plan_str(pre), plan_str(pre)[:2000]
     # (b) behavioral: the materialized model stage is actually parallel
     infd = X.infer_distinct(sents, num_partitions=8)
@@ -240,7 +240,7 @@ def test_linking_localcheckpoint_truncates_lineage(spark):
     p = plan_str(res)
     # the extractor/model python stages must NOT appear in the resolution
     # plan — the checkpoint cut the lineage there
-    assert "html_to_text" not in p and "_infer_distinct_batches" not in p, p[:2000]
+    assert "html_to_text" not in p and "_infer_batches" not in p, p[:2000]
 
 
 def test_incremental_dedup_verify_is_candidate_scoped(spark):
