@@ -12,6 +12,7 @@ it is property-tested equal to driver union-find.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -61,7 +62,11 @@ def _driver_union_find(spark, edge_rows) -> DataFrame:
         ru, rv = find(r[0]), find(r[1])
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    labels = [(n, find(n)) for n in parent]
+    # from pandas, not a list of tuples: a local relation (LocalTableScan)
+    # instead of a pickled-RDD scan and its parallelize job
+    labels = pd.DataFrame({"node": list(parent),
+                           "component": [find(n) for n in parent]},
+                          dtype="int64")
     return spark.createDataFrame(labels, "node long, component long")
 
 

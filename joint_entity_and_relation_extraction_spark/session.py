@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: the directory (or zip archive) this package is imported from
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     master: str | None = None,
@@ -74,9 +77,29 @@ def build_session(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
     )
-    if master:
-        b = b.master(master)
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        # Python workers fork from worker_daemon, not pyspark.daemon: Spark
+        # puts pyspark.zip, the py4j zip and the spark-core jar first on
+        # every worker's path, so workers compiled pyspark from the zip and
+        # every task's importlib.invalidate_caches() re-read the zips'
+        # directories in pure Python through 16 zipimporters — 115-315 ms
+        # of CPU per task (51% of sampled worker time, import machinery
+        # another 40%, the model 7%; kg_recrawl_merge at local[4]). The
+        # daemon drops the archives when site-packages holds the same
+        # pyspark/py4j: invalidate_caches() then costs 0.0-0.1 ms, and
+        # worker CPU per KG unit fell from ~10 to ~3 core-s. It must be
+        # importable when the daemon starts, before any --py-files are
+        # shipped, so the package's parent (a directory, or jers.zip
+        # under spark-submit) goes first on the workers' PYTHONPATH.
+        # Local masters only: cluster executors cannot see this path.
+        b = b.config("spark.python.daemon.module",
+                     f"{__package__}.worker_daemon")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (_PACKAGE_PARENT,
+                        conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    b = b.master(master)
+    for k, v in conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
 

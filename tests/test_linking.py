@@ -81,6 +81,18 @@ def test_cc_matches_union_find(spark, force_distributed):
     assert got == set(want.items())
 
 
+def test_driver_cc_labels_are_a_local_relation(spark):
+    """Driver union-find labels plan as a LocalTableScan: no pickled-RDD
+    scan, so no parallelize job before the surface map is broadcast."""
+    df = spark.createDataFrame([(1, 2), (2, 3), (7, 5)], "src long, dst long")
+    labels = C.connected_components(df)
+    plan = labels._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert labels.schema.simpleString() == "struct<node:bigint,component:bigint>"
+    assert sorted(map(tuple, labels.collect())) == [
+        (1, 1), (2, 1), (3, 1), (5, 5), (7, 5)]
+
+
 def test_star_contraction_logn_rounds_on_long_chain(spark):
     """Large-star/small-star must converge in O(log n) rounds on the
     worst-case shape for min-propagation: a 1000-node chain (diameter
