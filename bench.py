@@ -383,7 +383,7 @@ def child_query_suite() -> None:
     file-granular scan (bare read_table) instead of the r05
     cluster-width read_docs, measured in the same windows as the tracked
     entry — so the read_docs decision is re-validated from the artifact
-    every round (jobs/ab_lsh_shape.py is the standalone version)."""
+    every round."""
     from joint_entity_and_relation_extraction_spark.operators import dedup as DD
     from joint_entity_and_relation_extraction_spark.plans import registry
     from joint_entity_and_relation_extraction_spark.session import build_session

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pandas as pd
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
@@ -105,6 +105,20 @@ def _capped_groups(ex: DataFrame, key: str, max_df: int) -> DataFrame:
             .select("ds"))
 
 
+def _in_group_pairs(grouped: DataFrame, count_col: str) -> DataFrame:
+    """(d1, d2, count_col): every pair d1 < d2 inside each sorted ``ds``
+    group of :func:`_capped_groups`, counted over the groups that hold
+    both. Pairs come from a codegen'd nested transform over the doc
+    array, then one map-side-combinable groupBy count."""
+    pair_expr = F.expr(
+        "flatten(transform(ds, (x, i) -> "
+        "transform(slice(ds, i + 2, size(ds)), "
+        "y -> named_struct('d1', x, 'd2', y))))")
+    return (grouped.select(F.explode(pair_expr).alias("p"))
+            .groupBy(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
+            .agg(F.count("*").alias(count_col)))
+
+
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
                         threshold: float = 0.2,
                         max_df: int = MAX_SHINGLE_DF) -> DataFrame:
@@ -116,18 +130,14 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
     (≤ max_df² pair fragments), which keeps the work O(n·max_df) on
     hot-shingle corpora instead of O(hot²).
 
-    r08 shape (guide §2.3/§2.4): ONE shuffle of the (shingle, doc_id)
-    stream — groupBy shingle collecting the (≤ max_df) sorted doc list —
-    replaces the r07 df-tally + join-back + string-keyed SELF-JOIN,
-    which shuffled the exploded shingle strings three more times (df
-    agg, join rare, both self-join sides re-shuffled off the
-    checkpoint). Pairs are generated INSIDE each group by a codegen'd
-    nested transform over the sorted doc array — exactly the
-    C(group, 2) ordered (d1 < d2) pairs the self-join produced, value-
-    identical (driver hash + oracle unchanged). The grouped doc lists
-    (int arrays, no strings) feed both the pair stream and the per-doc
-    sizes → localCheckpoint (CLAUDE.md shared-subtree invariant).
-    Hot-key memory safety: see :func:`_capped_groups`."""
+    Shape: ONE shuffle of the (shingle, doc_id) stream — groupBy
+    shingle collecting the (≤ max_df) sorted doc list. Pairs are
+    generated inside each group (:func:`_in_group_pairs`): exactly the
+    C(group, 2) ordered (d1 < d2) pairs of the shingle self-join the
+    DuckDB oracle runs. The grouped doc lists (int arrays, no strings)
+    feed both the pair stream and the per-doc sizes → localCheckpoint
+    (CLAUDE.md shared-subtree invariant). Hot-key memory safety: see
+    :func:`_capped_groups`."""
     d = read_docs(spark, sf_dir).select(
         "doc_id", _shingles_expr(n).alias("sh"))
     ex_all = d.select("doc_id", F.explode("sh").alias("shingle"))
@@ -135,15 +145,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
         eager=False)
     sizes = (grouped.select(F.explode("ds").alias("doc_id"))
              .groupBy("doc_id").agg(F.count("*").alias("n_sh")))
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> named_struct('d1', x, 'd2', y))))")
-    pairs = (
-        grouped.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
-        .agg(F.count("*").alias("inter"))
-    )
+    pairs = _in_group_pairs(grouped, "inter")
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     return (
@@ -288,73 +290,6 @@ def minhash_bands_udf(hashes: pd.Series) -> pd.Series:
                       for i in range(n)])
 
 
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
-                      threshold: float = 0.2) -> DataFrame:
-    """MinHash-LSH near-dup pairs: shingle → 64 minhashes → 16 banded keys
-    → equi-join on (band position, key) → exact-Jaccard verify of the
-    candidates only. The band join is the scale path: shuffle keys are
-    uniform hashes, so no skew; candidate count ≈ true-pair count at the
-    chosen (b, r) S-curve.
-    """
-    # no .persist() on the CORPUS projection: the returned DataFrame is
-    # lazy, so a persist here can never be paired with an unpersist and
-    # pins cached blocks for the whole session (round-1 leak). The BANDED
-    # KEYS table is 16 rows x 3 longs per doc (~400 B/doc vs multi-KB
-    # docs), consumed by BOTH sides of the band self-join — without a
-    # checkpoint the shingle+minhash UDF runs 2x extra.
-    # localCheckpoint(eager=False) materializes it once on first use
-    # (measured 1.4-1.8x whole-op speedup at sf0.1); blocks are freed
-    # when the lineage is GC'd, not pinned for the session (VERDICT r02
-    # item 9, measured before applying).
-    d = read_docs(spark, sf_dir).select(
-        "doc_id", _shingles_expr(n).alias("sh"))
-    banded = d.select(
-        "doc_id",
-        F.posexplode(minhash_bands_udf(F.expr(_HASHED_SHINGLES))).alias(
-            "band", "key")).localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    # candidate id pairs first — a pair colliding in several bands is
-    # deduped BEFORE the (wide) shingle arrays are joined back, so the
-    # band-join shuffle moves only (id, id) rows. Checkpointed: the ids
-    # feed the candidate-doc semi-join AND the verify join (r08, same
-    # shape as minhash_incremental_pairs — CLAUDE.md shared-subtree
-    # invariant).
-    cand_ids = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .dropDuplicates(["d1", "d2"])
-        .localCheckpoint(eager=False)
-    )
-    # exact-Jaccard verify over CANDIDATE docs only (r08, guide §3.2):
-    # the r07 verify joined both pair sides through the FULL corpus
-    # shingle projection — two more corpus scans + two corpus-wide
-    # shuffles per run. Candidates ≈ true pairs at the chosen (b, r)
-    # S-curve, so the semi-join bounds the shingle recomputation and
-    # both verify joins at O(candidates) while keeping verification
-    # exact — the pair set is unchanged (pytest parity vs the ngram
-    # witness). The candidate shingles feed both verify sides →
-    # localCheckpoint.
-    cand_docs = (cand_ids.select(F.col("d1").alias("doc_id"))
-                 .union(cand_ids.select(F.col("d2").alias("doc_id")))
-                 .dropDuplicates(["doc_id"]))
-    sh = (read_docs(spark, sf_dir).join(cand_docs, "doc_id", "left_semi")
-          .select("doc_id", _shingles_expr(n).alias("sh"))
-          .localCheckpoint(eager=False))
-    s1 = sh.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))
-    s2 = sh.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
-    cand = cand_ids.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    return (
-        cand.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
-
-
 def band_index(docs: DataFrame, n: int = 2) -> DataFrame:
     """(doc_id, band, key) banded-minhash index rows for a corpus slice —
     the table you PERSIST (e.g. an IcebergLite table partitioned by
@@ -367,6 +302,81 @@ def band_index(docs: DataFrame, n: int = 2) -> DataFrame:
         "doc_id",
         F.posexplode(minhash_bands_udf(F.expr(_HASHED_SHINGLES))).alias(
             "band", "key"))
+
+
+def band_candidates(probe: DataFrame, index: DataFrame) -> DataFrame:
+    """Candidate pairs (d1 < d2, distinct) of documents whose band rows
+    collide: the equi-join of two (doc_id, band, key) tables on
+    (band, key). ``probe`` and ``index`` may be the same frame (a
+    self-join) or a batch against the index it is appended to. Only ids
+    leave the join, so the band shuffle and the dedup of pairs colliding
+    in several bands move (id, id) rows, never shingles or text."""
+    a, b = probe.alias("a"), index.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.key") == F.col("b.key"))
+               & (F.col("a.doc_id") != F.col("b.doc_id")))
+        .select(F.least("a.doc_id", "b.doc_id").alias("d1"),
+                F.greatest("a.doc_id", "b.doc_id").alias("d2"))
+        .dropDuplicates(["d1", "d2"])
+    )
+
+
+def verify_candidates(cand: DataFrame, docs: DataFrame,
+                      feature: Column) -> DataFrame:
+    """``cand`` (d1 < d2, plus any carried columns) joined to a per-doc
+    ``feature`` of both sides as ``f1``/``f2`` — the input of an exact
+    verify. ``docs`` has ``doc_id`` and ``text``; ``feature`` is a Column
+    over it. The feature is computed for candidate docs only: a left-semi
+    join on the candidate ids prunes ``docs`` first, so the feature stage
+    and both verify joins are O(candidates), not O(corpus).
+
+    ``cand`` feeds the id union and the verify join, and the features
+    feed both verify sides, so each is localCheckpointed (CLAUDE.md
+    shared-subtree invariant). Nothing is persisted: the result is lazy,
+    and a persist here could never be paired with an unpersist."""
+    cand = cand.localCheckpoint(eager=False)
+    cand_docs = (cand.select(F.col("d1").alias("doc_id"))
+                 .union(cand.select(F.col("d2").alias("doc_id")))
+                 .dropDuplicates(["doc_id"]))
+    f = (docs.join(cand_docs, "doc_id", "left_semi")
+         .select("doc_id", feature.alias("f"))
+         .localCheckpoint(eager=False))
+    return (cand
+            .join(f.select(F.col("doc_id").alias("d1"),
+                           F.col("f").alias("f1")), "d1")
+            .join(f.select(F.col("doc_id").alias("d2"),
+                           F.col("f").alias("f2")), "d2"))
+
+
+def jaccard_verified(cand: DataFrame, docs: DataFrame, n: int,
+                     threshold: float) -> DataFrame:
+    """(d1, d2, jaccard) of the candidate pairs whose exact Jaccard over
+    distinct word n-gram shingle sets is >= threshold (rounded to 6
+    places). Contract as :func:`verify_candidates`."""
+    v = verify_candidates(cand, docs, _shingles_expr(n))
+    inter = F.size(F.array_intersect("f1", "f2")).cast("double")
+    union = (F.size("f1") + F.size("f2")).cast("double") - inter
+    return (v.withColumn("jaccard", F.round(inter / union, 6))
+            .filter(F.col("jaccard") >= threshold)
+            .select("d1", "d2", "jaccard"))
+
+
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
+                      threshold: float = 0.2) -> DataFrame:
+    """MinHash-LSH near-dup pairs: shingle → 64 minhashes → 16 banded keys
+    → equi-join on (band position, key) → exact-Jaccard verify of the
+    candidates only. The band join is the scale path: shuffle keys are
+    uniform hashes, so no skew; candidate count ≈ true-pair count at the
+    chosen (b, r) S-curve.
+    """
+    # the banded keys (16 rows x 3 longs per doc, far smaller than the
+    # docs) feed BOTH sides of the band self-join — without a checkpoint
+    # the shingle+minhash UDF runs twice
+    banded = band_index(read_docs(spark, sf_dir), n).localCheckpoint(
+        eager=False)
+    return jaccard_verified(band_candidates(banded, banded),
+                            read_docs(spark, sf_dir), n, threshold)
 
 
 def minhash_incremental_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
@@ -393,48 +403,9 @@ def minhash_incremental_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
     all_idx = (band_index(docs, n)
                .withColumn("is_new", (F.col("doc_id") % mod) == 0)
                .localCheckpoint(eager=False))
-    new_idx = all_idx.filter("is_new").drop("is_new")
-    probe_side = all_idx.drop("is_new")
-    a, b = new_idx.alias("a"), probe_side.alias("b")
-    cand_ids = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") != F.col("b.doc_id")))
-        .select(F.least("a.doc_id", "b.doc_id").alias("d1"),
-                F.greatest("a.doc_id", "b.doc_id").alias("d2"))
-        .dropDuplicates(["d1", "d2"])
-        # the candidate set is tiny (pairs touching the new batch) but
-        # feeds BOTH the cand_docs semi-join and the final verify join —
-        # without a checkpoint the band-probe join and both band-index
-        # builds execute twice (measured 5.1s vs 3.5s on the bench suite)
-        .localCheckpoint(eager=False)
-    )
-    # exact-Jaccard verify over CANDIDATE docs only: at real scale the
-    # shingle table is corpus-sized, and joining both pair sides through
-    # it was 2 extra wide shuffles per batch (VERDICT r04 'What's wrong'
-    # #4). The candidate ids are tiny, so the semi-join reduces the
-    # shingle stage + both verify joins to O(candidates) while keeping
-    # the verification exact — pairs unchanged (pytest-pinned equality
-    # with the full-corpus run, test_dedup_similarity).
-    cand_docs = (cand_ids.select(F.col("d1").alias("doc_id"))
-                 .union(cand_ids.select(F.col("d2").alias("doc_id")))
-                 .dropDuplicates(["doc_id"]))
-    # the candidate shingles feed BOTH verify sides — without a
-    # checkpoint the scan + semi-join + shingle projection runs twice
-    # (r08; CLAUDE.md shared-subtree invariant)
-    sh = (docs.join(cand_docs, "doc_id", "left_semi")
-          .select("doc_id", _shingles_expr(n).alias("sh"))
-          .localCheckpoint(eager=False))
-    s1 = sh.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))
-    s2 = sh.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
-    cand = cand_ids.join(s1, "d1").join(s2, "d2")
-    inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-    union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-    return (
-        cand.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-    )
+    cand = band_candidates(all_idx.filter("is_new").drop("is_new"),
+                           all_idx.drop("is_new"))
+    return jaccard_verified(cand, docs, n, threshold)
 
 
 # --- SimHash ----------------------------------------------------------------
@@ -530,27 +501,16 @@ def winnow_pairs(spark: SparkSession, sf_dir: str, k: int = 5, w: int = 8,
 
     Scale shape: fingerprinting is one JVM-side pass (textstats); pair
     generation groups the (fp_hash, doc_id) stream ONCE per fingerprint
-    — the same r08 shape as ngram_jaccard_pairs (guide §2.3/§2.4): the
-    df cap bounds every group at max_df docs, in-group pairs come from a
-    codegen'd nested transform over the sorted doc array (exactly the
-    C(group, 2) ordered pairs the r07 df-tally + join-back + self-join
-    produced, at one shuffle of the stream instead of three), then a
-    map-side-combinable groupBy count. No Python, no cross join."""
+    — the same shape as ngram_jaccard_pairs: the df cap bounds every
+    group at max_df docs and :func:`_in_group_pairs` expands and counts
+    the in-group pairs. No Python, no cross join."""
     from .textstats import winnow_fingerprint
 
     fps = (winnow_fingerprint(spark, sf_dir, k=k, w=w)
            .select("doc_id", "fp_hash").distinct())
-    grouped = _capped_groups(fps, "fp_hash", max_df)
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> named_struct('d1', x, 'd2', y))))")
-    return (
-        grouped.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
-        .agg(F.count("*").alias("n_common_fp"))
-        .filter(F.col("n_common_fp") >= min_common)
-    )
+    return (_in_group_pairs(_capped_groups(fps, "fp_hash", max_df),
+                            "n_common_fp")
+            .filter(F.col("n_common_fp") >= min_common))
 
 
 # --- near-dup clustering (pairs → connected components) ---------------------
@@ -1024,10 +984,10 @@ EDIT_PREFIX = 160
 def edit_verify_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
                       threshold: float = 0.2,
                       max_dist: int = 40) -> DataFrame:
-    """Edit-distance verification of shingle-candidate near-dup pairs
-    (r07, staged for r08): candidates come from the df-capped shingle
-    equi-join (:func:`ngram_jaccard_pairs`), then each pair is verified
-    by the levenshtein distance of the documents' fixed-length prefixes
+    """Edit-distance verification of shingle-candidate near-dup pairs:
+    candidates come from the df-capped shingle equi-join
+    (:func:`ngram_jaccard_pairs`), then each pair is verified by the
+    levenshtein distance of the documents' fixed-length prefixes
     — the character-level confirmation pass that catches
     shingle-coincidence false positives (shared boilerplate vocabulary
     with different prose). Emits both the distance and a normalized
@@ -1036,9 +996,8 @@ def edit_verify_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
     Scale shape: candidate generation is the bounded equi-join (never
     all-pairs); the verify is a constant-cost (EDIT_PREFIX²) comparison
     per candidate via the JVM built-in levenshtein — whole-stage
-    codegen, no Python. The join back to the two text prefixes is two
-    equi-joins on doc_id against a pruned (doc_id, prefix) projection;
-    the pair set is candidate-sized, the corpus is touched once."""
+    codegen, no Python. The two text prefixes come from
+    :func:`verify_candidates`, computed for candidate docs only."""
     cand = ngram_jaccard_pairs(spark, sf_dir, n=n, threshold=threshold)
     return _edit_verify_of(spark, sf_dir, cand, max_dist)
 
@@ -1075,28 +1034,12 @@ def edit_verify_pairs_lsh(spark: SparkSession, sf_dir: str, n: int = 2,
 
 def _edit_verify_of(spark: SparkSession, sf_dir: str, cand: DataFrame,
                     max_dist: int) -> DataFrame:
-    # candidate-scoped prefix table (r08, guide §3.2): the r07 form
-    # joined the candidate pairs against the FULL corpus prefix
-    # projection twice — two corpus-wide shuffles to verify a
-    # candidate-sized pair set. The semi-join prunes the prefix table to
-    # candidate docs first (rows the inner joins would drop anyway —
-    # output identical); the pair table feeds the doc-id union AND the
-    # verify join, the pruned prefixes feed both verify sides → both
-    # localCheckpointed (CLAUDE.md shared-subtree invariant).
-    cand = cand.localCheckpoint(eager=False)
-    cand_docs = (cand.select(F.col("d1").alias("doc_id"))
-                 .union(cand.select(F.col("d2").alias("doc_id")))
-                 .dropDuplicates(["doc_id"]))
-    pre = (read_docs(spark, sf_dir).join(cand_docs, "doc_id", "left_semi")
-           .select("doc_id", F.substring("text", 1, EDIT_PREFIX).alias("pre"))
-           .localCheckpoint(eager=False))
-    pa_ = pre.select(F.col("doc_id").alias("d1"), F.col("pre").alias("p1"))
-    pb_ = pre.select(F.col("doc_id").alias("d2"), F.col("pre").alias("p2"))
-    dist = F.levenshtein("p1", "p2")
+    v = verify_candidates(cand, read_docs(spark, sf_dir),
+                          F.substring("text", 1, EDIT_PREFIX))
+    dist = F.levenshtein("f1", "f2")
     sim = F.round(F.lit(1.0) - dist.cast("double")
-                  / F.greatest(F.length("p1"), F.length("p2")), 6)
-    return (cand.join(pa_, "d1").join(pb_, "d2")
-            .select("d1", "d2", "jaccard",
-                    dist.cast("bigint").alias("edit_dist"),
-                    sim.alias("edit_sim"))
+                  / F.greatest(F.length("f1"), F.length("f2")), 6)
+    return (v.select("d1", "d2", "jaccard",
+                     dist.cast("bigint").alias("edit_dist"),
+                     sim.alias("edit_sim"))
             .filter(F.col("edit_dist") <= max_dist))

@@ -201,7 +201,8 @@ def dedup_index_handler(index_root: str, docs_root: str, pairs_root: str,
     self-collisions), so partial-crash replays converge instead of
     double-counting. Each pair is emitted exactly once — in the batch
     that ingests its LATER document."""
-    from ..operators.dedup import _shingles_expr, band_index
+    from ..operators.dedup import (band_candidates, band_index,
+                                   jaccard_verified)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         tag = f"dedup-{batch_id}"
@@ -247,42 +248,13 @@ def dedup_index_handler(index_root: str, docs_root: str, pairs_root: str,
                          [], "doc_id long, band int, key long"))
         probe = old_bands.select("doc_id", "band", "key").union(
             new_bands.select("doc_id", "band", "key"))
-        a, b = new_bands.alias("a"), probe.alias("b")
-        cand_ids = (
-            a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a.doc_id") != F.col("b.doc_id")))
-            .select(F.least("a.doc_id", "b.doc_id").alias("d1"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("d2"))
-            .dropDuplicates(["d1", "d2"])
-            # tiny, but referenced by BOTH cand_docs and the pairs join —
-            # checkpoint so the band-probe join runs once per micro-batch
-            # (same fix as the batch minhash_incremental_pairs path)
-            .localCheckpoint(eager=False))
         corpus = (il.read(spark, docs_root).select("doc_id", "text")
                   if il.exists(docs_root) else new_docs.limit(0))
-        # exact-Jaccard verify touches ONLY candidate documents: shingling
-        # the whole corpus per micro-batch would be a corpus-sized UDF +
-        # join every batch (VERDICT r04 'What's wrong' #4). The candidate
-        # id set is tiny (band collisions), so the semi-join turns the
-        # text fetch into an id-keyed lookup and the shingle stage into
-        # O(candidates); the verify itself stays EXACT, so the emitted
-        # pair set is unchanged (tests/test_streaming pins convergence to
-        # the batch LSH pairs; test also plan-gates the semi-join).
-        cand_docs = (cand_ids.select(F.col("d1").alias("doc_id"))
-                     .union(cand_ids.select(F.col("d2").alias("doc_id")))
-                     .dropDuplicates(["doc_id"]))
-        sh = (corpus.union(new_docs).dropDuplicates(["doc_id"])
-              .join(cand_docs, "doc_id", "left_semi")
-              .select("doc_id", _shingles_expr(n).alias("sh")))
-        s1 = sh.select(F.col("doc_id").alias("d1"), F.col("sh").alias("sh1"))
-        s2 = sh.select(F.col("doc_id").alias("d2"), F.col("sh").alias("sh2"))
-        inter = F.size(F.array_intersect("sh1", "sh2")).cast("double")
-        union = (F.size("sh1") + F.size("sh2")).cast("double") - inter
-        pairs = (cand_ids.join(s1, "d1").join(s2, "d2")
-                 .withColumn("jaccard", F.round(inter / union, 6))
-                 .filter(F.col("jaccard") >= threshold)
-                 .select("d1", "d2", "jaccard"))
+        # the verify reaches the corpus through a semi-join on the
+        # candidate ids, so each micro-batch shingles candidate docs only
+        pairs = jaccard_verified(
+            band_candidates(new_bands, probe),
+            corpus.union(new_docs).dropDuplicates(["doc_id"]), n, threshold)
         # pairs first (guarded), then the corpus-state tables: a crash at
         # any point replays into the same values, tags skip re-appends
         for root, df, part in ((pairs_root, pairs, []),

@@ -243,20 +243,21 @@ def test_linking_localcheckpoint_truncates_lineage(spark):
     assert "html_to_text" not in p and "_infer_batches" not in p, p[:2000]
 
 
-def test_incremental_dedup_verify_is_candidate_scoped(spark):
-    """VERDICT r04 item 4 plan gate: the incremental dedup verify stage
-    must reach the corpus through a LEFT-SEMI join on the (tiny)
-    candidate id set — shingling the whole corpus per batch was 2 extra
-    corpus-wide shuffles. The semi-join must sit BELOW the shingle
-    projection, i.e. the verify joins consume the semi-reduced side.
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs",
+                                "minhash_incremental_pairs",
+                                "edit_verify_pairs", "edit_verify_pairs_lsh"])
+def test_incremental_dedup_verify_is_candidate_scoped(spark, op):
+    """Every candidate→verify caller must reach the corpus through a
+    LEFT-SEMI join on the (tiny) candidate id set — shingling or
+    prefixing the whole corpus per call is two extra corpus-wide
+    shuffles. The semi-join must sit BELOW the feature projection, i.e.
+    the verify joins consume the semi-reduced side.
 
-    r08: the candidate shingles are localCheckpointed (they feed both
-    verify sides), which truncates optimizedPlan() at a LogicalRDD and
-    hides the semi-join from this gate — so the gate builds the frame
-    with checkpointing bypassed to assert the actual operator graph
-    (the checkpoint only materializes that graph, it cannot change it).
-    The r08 minhash_lsh_pairs verify gets the same candidate-scoped
-    shape, asserted here too."""
+    The candidate features are localCheckpointed (they feed both verify
+    sides), which truncates optimizedPlan() at a LogicalRDD and hides the
+    semi-join from this gate — so the gate builds the frame with
+    checkpointing bypassed to assert the actual operator graph (the
+    checkpoint only materializes that graph, it cannot change it)."""
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
     from joint_entity_and_relation_extraction_spark.operators import dedup as DD
@@ -264,14 +265,11 @@ def test_incremental_dedup_verify_is_candidate_scoped(spark):
     real_ckpt = CDF.localCheckpoint
     CDF.localCheckpoint = lambda self, eager=True: self
     try:
-        df = DD.minhash_incremental_pairs(spark, SF001, n=2, threshold=0.2)
+        df = getattr(DD, op)(spark, SF001, n=2, threshold=0.2)
         p = df._jdf.queryExecution().optimizedPlan().toString()
-        full = DD.minhash_lsh_pairs(spark, SF001, n=2, threshold=0.2)
-        p_full = full._jdf.queryExecution().optimizedPlan().toString()
     finally:
         CDF.localCheckpoint = real_ckpt
     assert "LeftSemi" in p
-    assert "LeftSemi" in p_full
 
 
 def test_lsh_graph_degrees_plan_is_banded_equi_join(spark):
