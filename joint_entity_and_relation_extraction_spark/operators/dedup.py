@@ -373,10 +373,10 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, n: int = 2,
     # the banded keys (16 rows x 3 longs per doc, far smaller than the
     # docs) feed BOTH sides of the band self-join — without a checkpoint
     # the shingle+minhash UDF runs twice
-    banded = band_index(read_docs(spark, sf_dir), n).localCheckpoint(
-        eager=False)
-    return jaccard_verified(band_candidates(banded, banded),
-                            read_docs(spark, sf_dir), n, threshold)
+    docs = read_docs(spark, sf_dir)
+    banded = band_index(docs, n).localCheckpoint(eager=False)
+    return jaccard_verified(band_candidates(banded, banded), docs, n,
+                            threshold)
 
 
 def minhash_incremental_pairs(spark: SparkSession, sf_dir: str, n: int = 2,

@@ -78,9 +78,11 @@ def merge_triple_evidence(spark: SparkSession, table_root: str,
         return delta
     if il.exists(table_root):
         # read() returns an empty schema-typed frame when the preds have
-        # not materialized yet — no exception-as-control-flow
+        # not materialized yet; combining with it gives back the delta
+        # (every aggregate is a monoid, and size(sources) equals
+        # countDistinct(url)), so no isEmpty() job decides between them
         existing = il.read(spark, table_root, where={"pred": preds})
-        merged = delta if existing.isEmpty() else _combine(existing, delta)
+        merged = _combine(existing, delta)
     else:
         merged = delta
     il.overwrite_partitions(triple_write_layout(merged), table_root, ["pred"])

@@ -71,6 +71,19 @@ def build_session(
         # (first_seen/warc_ts bounds — verified in-sandbox: INT96 footer
         # stats are None); micros is also the type real Iceberg mandates
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # whole-stage codegen keeps its Janino-compiled classes in one
+        # JVM-wide LRU cache of 100 entries by default. The engine's plan
+        # vocabulary is larger: one kg_recrawl_merge unit compiles ~145
+        # classes (~25 more the first time it merges into an existing
+        # table), one near-dup round ~115, one kg_stages pass on sf0.001
+        # 105. At 100 every unit evicted the classes the next one needed,
+        # so each unit recompiled all of them (~15 ms of Janino each) and
+        # the JIT then recompiled the new classes to machine code: 8-13 of
+        # a unit's 18-25 JVM core-s went to C1/C2 (local[4]). With 1000,
+        # repeated units and passes compile 0 classes. Static conf, read
+        # once when the cache is first built, so it must be set here,
+        # before the session's first query.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         # python workers: keep numpy single-threaded (parallelism = partitions)

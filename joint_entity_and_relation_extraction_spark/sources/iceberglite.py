@@ -29,6 +29,7 @@ import time
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _manifest_path(root: str) -> str:
@@ -559,39 +560,30 @@ def _assemble_units(spark: SparkSession, root: str, m: dict,
     """Shared tail of :func:`read` / :func:`read_incremental`: turn a
     pruned unit list into a DataFrame projected to the schema committed
     at ``snap`` (empty-with-schema when no units survive)."""
+    snap_schema = _schema_at(m, snap)
+    if snap_schema is None:
+        raise ValueError(
+            f"IcebergLite table {root} has never been written ({empty_ctx})")
+    want = StructType.fromJson(json.loads(snap_schema))
     if not units:
-        schema_json = _schema_at(m, snap)
-        if schema_json is None:
-            raise ValueError(
-                f"IcebergLite table {root} has never been written"
-                f" ({empty_ctx})")
-        from pyspark.sql.types import StructType
-        return spark.createDataFrame([], StructType.fromJson(json.loads(schema_json)))
+        return spark.createDataFrame([], want)
     # group by owning snap dir so partition columns resolve via basePath
     by_snap: dict[str, list[str]] = {}
     for u in units:
         snap_dir = os.sep.join(u.split(os.sep)[:2])  # data/snap-N
         by_snap.setdefault(snap_dir, []).append(os.path.join(root, u))
+    # read with the schema committed at ``snap``: no parquet schema
+    # inference (one footer job per snapshot dir), and schema evolution
+    # (Iceberg add-column semantics) falls out of the reader — units
+    # written before a column existed read it as NULL, and a reader at
+    # snapshot S sees exactly the columns that existed at S
     parts = [
-        spark.read.option("basePath", os.path.join(root, snap_dir)).parquet(*paths)
+        spark.read.schema(want).option("basePath", os.path.join(root, snap_dir))
+        .parquet(*paths)
         for snap_dir, paths in sorted(by_snap.items())
     ]
-    # schema evolution (Iceberg add-column semantics): snapshots written
-    # before a column existed union in with NULLs for it; the committed
-    # manifest schema fixes the final column set and order, so a reader
-    # at snapshot S sees exactly the columns that existed at S
-    out = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-    snap_schema = _schema_at(m, snap)
-    if snap_schema is not None:
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
-        want = StructType.fromJson(json.loads(snap_schema))
-        cols = [F.col(f.name) if f.name in out.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in want.fields]
-        out = out.select(*cols)
-    return out
+    # partition columns come last in each scan; restore the committed order
+    return reduce(DataFrame.unionByName, parts).select(*want.fieldNames())
 
 
 def read_incremental(spark: SparkSession, root: str, from_snapshot: int,

@@ -390,6 +390,24 @@ def test_schema_evolution_add_column(spark):
     assert il.read(spark, tbl, where={"k": "a"}).collect()[0].extra is None
 
 
+
+def test_read_takes_the_committed_schema(spark, tbl):
+    """Reads use the schema committed in the manifest instead of inferring
+    one from parquet: no Spark job runs to build the scan, and a string
+    partition column whose values look numeric stays a string."""
+    from pyspark.sql.types import StringType
+
+    il.append(_df(spark, [("1", 1), ("2", 2)]), tbl, ["k"])
+    sc = spark.sparkContext
+    sc.setJobGroup("iceberglite-read-schema", "read")
+    try:
+        df = il.read(spark, tbl)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("iceberglite-read-schema") == []
+    assert df.schema["k"].dataType == StringType()
+    assert {(r.k, r.v) for r in df.collect()} == {("1", 1), ("2", 2)}
+
 def test_merge_upsert_updates_inserts_and_time_travels(spark, tbl):
     """MERGE INTO semantics: matched keys replaced, unmatched inserted,
     untouched rows preserved; the pre-merge snapshot still time-travels;

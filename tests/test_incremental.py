@@ -58,6 +58,22 @@ def test_merge_touches_only_batch_partitions(spark, canon_with_ts, tmp_path):
     assert all("pred=KILL" in u for u in added)
 
 
+
+def test_merge_of_new_preds_into_existing_table_equals_batch_aggregate(
+        spark, canon_with_ts, tmp_path):
+    """A batch whose preds the table has never held merges against an
+    empty slice: the combine gives back the batch's own G1 aggregate on
+    every column."""
+    root = str(tmp_path / "triples_new_preds")
+    INC.merge_triple_evidence(spark, root,
+                              canon_with_ts.filter(F.col("pred") == "KILL"))
+    batch = canon_with_ts.filter(F.col("pred") != "KILL")
+    got = INC.merge_triple_evidence(spark, root, batch)
+    want = INC.aggregate_triples(batch)
+    assert got.columns == want.columns and len(want.columns) == 9
+    rows = [sorted(tuple(r) for r in df.collect()) for df in (got, want)]
+    assert rows[0] == rows[1] and len(rows[0]) > 100
+
 def test_merge_upsert_path_equals_one_shot(spark, canon_with_ts, tmp_path):
     """The MERGE INTO fold (VERDICT r04 item 6) reproduces the one-shot
     aggregation exactly, commits 'merge' snapshots (not overwrites), and

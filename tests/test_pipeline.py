@@ -93,6 +93,26 @@ def test_kg_stages_dedup_off_gives_same_canon(spark):
     assert rows[True] == rows[False] and len(rows[True]) > 1000
 
 
+
+def test_repeated_kg_pass_compiles_no_new_classes(spark):
+    """A second identical kg_stages pass reuses every class whole-stage
+    codegen compiled for the first: the session's codegen cache holds the
+    engine's plan vocabulary (one pass on sf0.001 is ~105 classes; at
+    Spark's default of 100 entries the second pass recompiled 59)."""
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    pages, aliases = web_pages(spark, SF0001), L.alias_dict(spark, SF0001)
+    rows, new_compiles = [], []
+    for _ in range(2):
+        before = compiles.getCount()
+        g = kg_stages(spark, pages, aliases)
+        rows.append(sorted(tuple(r) for r in g.canon.collect()))
+        new_compiles.append(compiles.getCount() - before)
+        for df in g.held:
+            df.unpersist()
+    assert rows[0] == rows[1] and len(rows[0]) > 1000
+    assert new_compiles[1] == 0, new_compiles
+
 def test_resume_noop_skips_everything(spark, first_run):
     out, triples = first_run
     res = run_pipeline(spark, SF0001, out, run_id="r2", resume=True)
