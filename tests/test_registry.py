@@ -62,31 +62,27 @@ def test_oracle_keys_subset_of_queries():
     assert set(registry.all_oracles()) <= set(registry.all_queries())
 
 
-# Independent pinned copy of the r07 driver window (registry.WINDOW): a
+# Independent pinned copy of the r09 driver window (registry.WINDOW): a
 # deliberate rotation edits BOTH files, so an accidental edit of either
 # is loud — the exact-membership discipline that stopped the r02/r04
 # silent evictions, carried into the explicit-window mechanism.
-EXPECTED_WINDOW_R07 = [
-    "dedup_substring_spans", "dedup_substring_scrub",
-    "dedup_substring_scrub_text",
-    "iceberg_incremental_scan", "iceberg_bloom_lookup",
-    "curation_k_anonymity", "window_scd2", "sample_exact_k",
-    "text_bm25_topk",
-    "agg_count_distinct", "agg_cube", "agg_group_multi", "agg_rollup",
-    "join_full", "join_left", "join_semi", "sort_limit",
-    "window_frame_sum", "window_lag_lead", "window_rank",
-    "window_topk_per_group",
-    "join_anti", "join_broadcast", "join_shuffledhash", "join_sortmerge",
-    "join_theta", "stream_sliding_batch",
-    "agg_approx_percentile", "agg_exact_percentile", "filter_pushdown",
-    "higher_order_funcs", "join_asof",
-    "ann_topk_bruteforce", "ann_topk_ivf", "ann_topk_lsh",
-    "curation_select", "curation_select_sketch",
-    "dedup_clusters", "dedup_embedding_clusters", "dedup_embedding_cosine",
-    "dedup_exact", "dedup_keep_best", "dedup_minhash_incremental",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_winnow_pairs", "emb_label_centroids", "grouped_map_sessionize",
-    "iceberg_stats_skipping",
+EXPECTED_WINDOW_R09 = [
+    "iceberg_metadata_snapshots", "text_bigram_logprob", "text_zipf_slope",
+    "dedup_edit_verify", "curation_domain_cap", "tpch_q3", "tpch_q5",
+    "funnel_steps", "graph_triangles", "json_variant", "text_tfidf_topk",
+    "dedup_edit_verify_lsh", "graph_triangles_lsh",
+    "agg_approx_distinct", "agg_salted_skew", "curation_contamination",
+    "curation_mixture_sample", "curation_score_normalize", "curation_split",
+    "explode_array", "graph_degrees", "graph_degrees_lsh", "graph_pagerank",
+    "graph_pagerank_lsh", "join_range_bucketed", "join_salted",
+    "kg_canonical_triples", "kg_entity_pagerank", "kg_extract_text",
+    "kg_links", "kg_mentions", "kg_sentences", "kg_triple_metrics",
+    "kg_triples_raw", "kg_web_pages", "mm_audio_windows",
+    "mm_binary_metadata", "mm_frame_sample", "mm_media_features",
+    "pack_sequences", "pack_sequences_sharded", "pivot_event_type",
+    "sample_frac", "sample_stratified", "scan_project",
+    "stream_interval_join_batch", "text_ngram_topk", "text_repetition",
+    "text_token_stats", "text_winnow_fingerprint",
 ]
 
 
@@ -96,10 +92,10 @@ def test_driver_window_covers_priority_queries():
     From r06 the window is the explicit registry.WINDOW list; assert the
     emitted prefix equals the independently pinned copy above."""
     window = list(registry.all_queries())[: registry.DRIVER_WINDOW]
-    assert window == EXPECTED_WINDOW_R07, (
+    assert window == EXPECTED_WINDOW_R09, (
         f"driver window drifted:\n"
-        f" evicted={sorted(set(EXPECTED_WINDOW_R07) - set(window))}\n"
-        f" intruded={sorted(set(window) - set(EXPECTED_WINDOW_R07))}")
+        f" evicted={sorted(set(EXPECTED_WINDOW_R09) - set(window))}\n"
+        f" intruded={sorted(set(window) - set(EXPECTED_WINDOW_R09))}")
 
 
 def _correctness_rounds():
