@@ -27,6 +27,7 @@ SHOW = [
     "curation_select",        # two windows over ONE source exchange
     "pack_sequences",         # per-shard prefix-sum packing, one exchange
     "text_winnow_fingerprint",  # one exchange + one sort for two windows
+    "stream_session_batch",   # session_window aggregation
     # r05 second batch
     "text_repetition",        # per-word tally partial agg + array-side grams
     "text_ngram_topk",        # partial agg + TakeOrderedAndProject (no sort)

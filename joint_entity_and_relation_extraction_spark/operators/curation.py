@@ -347,6 +347,29 @@ GROUP BY c.doc_id
 """
 
 
+def pack_manifest(spark: SparkSession, sf_dir: str,
+                  budget: int = 2048) -> DataFrame:
+    """Per-pack rollup of :func:`pack_sequences_sharded` — the manifest a
+    training loader actually consumes: one row per (lang, pack) with its
+    document count, token mass and first document. Map-side-combinable
+    aggregation over the packing output; no additional windows."""
+    packs = pack_sequences_sharded(spark, sf_dir, budget=budget)
+    return (packs.groupBy("lang", "pack_id")
+            .agg(F.count("*").cast("bigint").alias("n_docs"),
+                 F.sum("n_tokens").cast("bigint").alias("pack_tokens"),
+                 F.min("doc_id").alias("first_doc_id")))
+
+
+def sql_pack_manifest(budget: int = 2048) -> str:
+    return f"""
+WITH packs AS ({sql_pack_sequences(budget=budget)})
+SELECT lang, pack_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
+       CAST(SUM(n_tokens) AS BIGINT) AS pack_tokens,
+       MIN(doc_id) AS first_doc_id
+FROM packs GROUP BY lang, pack_id
+"""
+
+
 def dedup_keep_best(spark: SparkSession, sf_dir: str, n: int = 2,
                     threshold: float = 0.2) -> DataFrame:
     """Keep-one-per-near-dup-cluster, quality-aware: for every cluster
@@ -380,6 +403,45 @@ SELECT cluster_id,
        MAX(q_score) AS best_score,
        CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM scored GROUP BY cluster_id
+"""
+
+
+def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C4-style rule-based pre-filter (Raffel et al. 2020 §2.2 adapted to
+    the single-line synthetic corpus): per-document boolean reasons plus
+    the final keep decision, so a pipeline can both filter AND report
+    per-rule drop rates. Pure whole-stage-codegen built-ins — at 100 TB
+    this is a map-only pass that Catalyst folds into the scan."""
+    d = read_table(spark, sf_dir, "documents")
+    words = F.split(F.col("text"), " ")
+    n = F.size(words).cast("double")
+    avg_len = (F.expr("aggregate(split(text, ' '), 0L, "
+                      "(a, x) -> a + length(x))").cast("double") / n)
+    distinct_ratio = F.size(F.array_distinct(words)).cast("double") / n
+    return (d.select(
+        "doc_id",
+        (n < 10).alias("too_short"),
+        (distinct_ratio < 0.3).alias("low_diversity"),
+        ((avg_len < 2.0) | (avg_len > 12.0)).alias("bad_word_len"))
+        .withColumn("keep", ~F.col("too_short") & ~F.col("low_diversity")
+                    & ~F.col("bad_word_len")))
+
+
+SQL_QUALITY_FILTER = """
+WITH f AS (
+  SELECT doc_id,
+         CAST(LEN(STRING_SPLIT(text, ' ')) AS DOUBLE) AS n,
+         CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS DOUBLE) AS nd,
+         CAST(LIST_SUM(LIST_TRANSFORM(STRING_SPLIT(text, ' '),
+                                      x -> LENGTH(x))) AS DOUBLE) AS chars
+  FROM documents)
+SELECT doc_id,
+       n < 10 AS too_short,
+       nd / n < 0.3 AS low_diversity,
+       (chars / n < 2.0 OR chars / n > 12.0) AS bad_word_len,
+       NOT (n < 10) AND NOT (nd / n < 0.3)
+           AND NOT (chars / n < 2.0 OR chars / n > 12.0) AS keep
+FROM f
 """
 
 
@@ -475,8 +537,9 @@ def k_anonymity_filter(spark: SparkSession, sf_dir: str,
     """Privacy-grade curation (r06, registered in the r07 rotation): suppress every
     document whose quasi-identifier combination is shared by fewer than
     k documents — the standard k-anonymity release rule, the structured
-    complement of a regex PII scrub (which removes identifiers IN the
-    text; this removes rows whose METADATA is identifying). Survivors carry their group size so downstream
+    complement of the regex PII scrub (textstats.pii_scrub removes
+    identifiers IN the text; this removes rows whose METADATA is
+    identifying). Survivors carry their group size so downstream
     sampling can reweight.
 
     Scale shape: one map-side-combinable groupBy on the quasi columns,
@@ -556,7 +619,7 @@ def domain_cap(spark: SparkSession, sf_dir: str, cap: int = 5) -> DataFrame:
     quality (length here; any score column slots in), keep the best
     ``cap``. The synthetic corpus carries no URL column, so the witness
     first splices a deterministic URL per document (same expression on
-    both engines); the operator under test is
+    both engines — the pii_scrub precedent); the operator under test is
     the host-extraction + per-domain top-k.
 
     Scale shape: URL parsing is a map-only regexp; the cap is the

@@ -545,8 +545,8 @@ def merge_cluster_labels(labels: DataFrame, new_pairs: DataFrame) -> DataFrame:
     the batch (O(batch) nodes, not O(corpus)), then relabel exactly the
     docs whose cluster is in a merged group. Labels stay
     min-doc_id-canonical, so the result is IDENTICAL to a full CC over
-    (old pairs ∪ batch pairs) — pytest-pinned against one batch CC over
-    the whole pair set.
+    (old pairs ∪ batch pairs) — hash-checked against the recursive-CTE
+    clusters oracle via clusters_incremental, and pytest-pinned.
 
     Per-batch cost: one join of the batch endpoints against the label
     table (id-keyed, prunable), CC on the batch-sized label graph, and
@@ -589,6 +589,32 @@ def merge_cluster_labels(labels: DataFrame, new_pairs: DataFrame) -> DataFrame:
              .select("doc_id",
                      F.coalesce("new_label", "label").alias("cluster_id")))
     return untouched.unionByName(relabeled).unionByName(fresh)
+
+
+def clusters_incremental(spark: SparkSession, sf_dir: str, n: int = 2,
+                         threshold: float = 0.2, mod: int = 5) -> DataFrame:
+    """Witness for :func:`merge_cluster_labels`: split ``documents`` into
+    an existing corpus (doc_id % mod != 0) and a new batch (== 0),
+    label the old corpus with batch CC over the old-old pairs, then fold
+    the pairs touching the new batch in incrementally. old-old ∪
+    touching-new partitions the full pair set, so the result must equal
+    the from-scratch :func:`neardup_clusters` — which is exactly the
+    oracle it is hash-checked against (same recursive-CTE SQL)."""
+    pairs = (ngram_jaccard_pairs(spark, sf_dir, n=n, threshold=threshold)
+             .select("d1", "d2")
+             .localCheckpoint(eager=False))
+    is_new1 = (F.col("d1") % mod) == 0
+    is_new2 = (F.col("d2") % mod) == 0
+    old_pairs = pairs.filter(~is_new1 & ~is_new2)
+    new_pairs = pairs.filter(is_new1 | is_new2)
+    from .canonicalize import connected_components
+
+    old_labels = (connected_components(
+        old_pairs.select(F.col("d1").alias("src"),
+                         F.col("d2").alias("dst")))
+        .select(F.col("node").alias("doc_id"),
+                F.col("component").alias("cluster_id")))
+    return merge_cluster_labels(old_labels, new_pairs)
 
 
 def sql_neardup_clusters(n: int = 2, threshold: float = 0.2) -> str:

@@ -1,12 +1,13 @@
-"""Grouped-map (applyInPandas) operator — a row of the UDF-surface matrix
-(SURVEY.md §2.5). It has an exact SQL oracle, so it runs under the
-driver's value-hash gate.
+"""Grouped-map (applyInPandas) and grouped-agg (pandas UDAF) operators —
+the remaining rows of the UDF-surface matrix (SURVEY.md §2.5). Both have
+exact SQL oracles so they run under the driver's value-hash gate.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..sources.io import read_table
 
@@ -61,4 +62,31 @@ SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_sessions,
        CAST(SUM(sz) AS BIGINT) AS n_events,
        CAST(MAX(sz) AS BIGINT) AS longest_session
 FROM sized GROUP BY user_id
+"""
+
+
+from pyspark.sql.types import DoubleType  # noqa: E402
+
+
+@F.pandas_udf(DoubleType())
+def _weighted_avg(v: pd.Series, w: pd.Series) -> float:
+    return float((v * w).sum() / w.sum())
+
+
+def weighted_avg_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Grouped-agg pandas UDAF: event value weighted by its JSON payload
+    weight — Arrow-batched per group, no row-at-a-time Python."""
+    e = read_table(spark, sf_dir, "events").select(
+        "event_type", F.col("value").alias("v"),
+        F.get_json_object("props", "$.k").cast("double").alias("w"))
+    return (e.groupBy("event_type")
+            .agg(F.round(_weighted_avg("v", "w"), 6).alias("wavg")))
+
+
+SQL_WEIGHTED_AVG = """
+SELECT event_type,
+       ROUND(SUM(value * CAST(JSON_EXTRACT_STRING(props, '$.k') AS DOUBLE))
+             / SUM(CAST(JSON_EXTRACT_STRING(props, '$.k') AS DOUBLE)), 6)
+         AS wavg
+FROM events GROUP BY event_type
 """

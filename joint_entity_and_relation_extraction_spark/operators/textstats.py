@@ -1,7 +1,6 @@
 """Text-analysis operators for the training-data pipeline (task brief):
-token counting, repetition scoring, n-gram language-model scoring,
-winnowing fingerprints and term-set retrieval. All pure built-ins
-(whole-stage codegen) — no Python.
+token counting, quality scoring, language-ID scoring, document
+fingerprinting. All pure built-ins (whole-stage codegen) — no Python.
 """
 
 from __future__ import annotations
@@ -10,6 +9,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import read_docs, read_table
+
+# small function-word profiles per language (public knowledge)
+LANG_MARKERS = {
+    "en": ["the", "and", "of", "to", "a", "in", "is", "that"],
+    "fr": ["le", "la", "et", "de", "un", "une", "est", "que"],
+    "es": ["el", "la", "y", "de", "un", "una", "es", "que"],
+    "de": ["der", "die", "und", "das", "ein", "ist", "nicht", "zu"],
+    "zh": ["的", "是", "了", "在", "我", "有", "和", "不"],
+}
 
 
 def _words():
@@ -39,6 +47,99 @@ SELECT doc_id,
        CAST(LENGTH(text) AS BIGINT) AS n_chars_m
 FROM documents
 """
+
+
+def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Heuristic quality features: distinct-token ratio, mean word length,
+    uppercase ratio — the usual cheap pre-filter columns for corpus
+    curation."""
+    d = read_table(spark, sf_dir, "documents")
+    words = _words()
+    n = F.size(words).cast("double")
+    avg_len = F.expr(
+        "aggregate(split(text, ' '), 0L, (a, x) -> a + length(x))"
+    ).cast("double") / n
+    return d.select(
+        "doc_id",
+        F.round((F.size(F.array_distinct(words)).cast("double") / n), 6)
+        .alias("distinct_ratio"),
+        F.round(avg_len, 6).alias("avg_word_len"),
+        F.round(
+            F.length(F.regexp_replace("text", "[^A-Z]", "")).cast("double")
+            / F.length("text"), 6).alias("upper_ratio"),
+    )
+
+
+SQL_QUALITY_SCORES = """
+SELECT doc_id,
+       ROUND(CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS DOUBLE)
+             / LEN(STRING_SPLIT(text, ' ')), 6) AS distinct_ratio,
+       ROUND(CAST(LIST_SUM(LIST_TRANSFORM(STRING_SPLIT(text, ' '),
+                                          x -> LENGTH(x))) AS DOUBLE)
+             / LEN(STRING_SPLIT(text, ' ')), 6) AS avg_word_len,
+       ROUND(CAST(LENGTH(REGEXP_REPLACE(text, '[^A-Z]', '', 'g')) AS DOUBLE)
+             / LENGTH(text), 6) AS upper_ratio
+FROM documents
+"""
+
+
+def langid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Function-word hit counts per language — the oracle-checkable half of
+    language ID (argmax lives in langid_predict)."""
+    d = read_table(spark, sf_dir, "documents")
+    cols = [F.col("doc_id"), F.col("lang").alias("lang_meta")]
+    for lg, markers in sorted(LANG_MARKERS.items()):
+        arr = ", ".join(f"'{m}'" for m in markers)
+        cols.append(
+            F.expr(f"size(filter(split(lower(text), ' '), "
+                   f"x -> array_contains(array({arr}), x)))")
+            .cast("bigint").alias(f"hits_{lg}"))
+    return d.select(*cols)
+
+
+def _sql_langid_scores() -> str:
+    parts = []
+    for lg, markers in sorted(LANG_MARKERS.items()):
+        arr = ", ".join(f"'{m}'" for m in markers)
+        parts.append(
+            f"CAST(LEN(LIST_FILTER(STRING_SPLIT(LOWER(text), ' '), "
+            f"x -> LIST_CONTAINS([{arr}], x))) AS BIGINT) AS hits_{lg}")
+    return ("SELECT doc_id, lang AS lang_meta, " + ", ".join(parts)
+            + " FROM documents")
+
+
+SQL_LANGID_SCORES = _sql_langid_scores()
+
+
+def langid_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """argmax over the marker-hit vector with deterministic lang-code
+    tie-break (struct array_max: compares (hits, rev_lang) field-wise)."""
+    scores = langid_scores(spark, sf_dir)
+    structs = F.array(*[
+        F.struct(F.col(f"hits_{lg}").alias("hits"),
+                 F.lit(lg).alias("lang"))
+        for lg in sorted(LANG_MARKERS)])
+    best = F.array_max(structs)
+    return scores.select(
+        "doc_id", "lang_meta", best["lang"].alias("lang_pred"),
+        best["hits"].alias("best_hits"))
+
+
+def _sql_langid_predict() -> str:
+    """Argmax mirror of langid_predict: DuckDB structs compare
+    lexicographically by field order exactly like Spark's array_max over
+    (hits, lang) structs, so LIST_MAX over the same structs reproduces
+    the tie-break bit-for-bit (GREATEST rejects struct args)."""
+    structs = ", ".join(
+        f"{{'hits': hits_{lg}, 'lang': '{lg}'}}"
+        for lg in sorted(LANG_MARKERS))
+    return (f"WITH s AS ({SQL_LANGID_SCORES}) "
+            f"SELECT doc_id, lang_meta, "
+            f"(LIST_MAX([{structs}])).lang AS lang_pred, "
+            f"(LIST_MAX([{structs}])).hits AS best_hits FROM s")
+
+
+SQL_LANGID_PREDICT = _sql_langid_predict()
 
 
 def winnow_fingerprint(spark: SparkSession, sf_dir: str, k: int = 5,
@@ -76,6 +177,25 @@ def winnow_fingerprint(spark: SparkSession, sf_dir: str, k: int = 5,
                     (-F.col("m.np")).cast("bigint").alias("fp_pos"),
                     F.col("m.h").alias("fp_hash"))
             .distinct())
+
+
+def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Document fingerprint: md5 over case/whitespace-normalized text plus
+    a length bucket — the key for fuzzy-exact dedup at scale."""
+    d = read_table(spark, sf_dir, "documents")
+    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
+    return d.select(
+        "doc_id",
+        F.md5(norm).alias("norm_fp"),
+        (F.floor(F.length("text") / 100) * 100).cast("bigint").alias("len_bucket"),
+    )
+
+
+SQL_FINGERPRINT = r"""
+SELECT doc_id, MD5(REGEXP_REPLACE(LOWER(text), '\s+', ' ', 'g')) AS norm_fp,
+       CAST(FLOOR(LENGTH(text) / 100) * 100 AS BIGINT) AS len_bucket
+FROM documents
+"""
 
 
 def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,6 +260,130 @@ FROM pd JOIN g ON pd.doc_id = g.doc_id
 """
 
 
+def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-unigram language-model scoring — the cheap perplexity proxy
+    used as a quality filter (CCNet-style, Wenzek et al. 2019): train
+    word → count over the WHOLE corpus, then score each document by the
+    mean negative log2 probability of its word occurrences. Two
+    shuffles total (word tally, per-doc mean); the LM join is a plain
+    equi-join — broadcast it when the vocabulary fits (fixture scale),
+    shuffle-join when a 100 TB corpus's vocabulary doesn't. The scalar
+    corpus total stays in-plan via a broadcast single-row cross join
+    (no driver collect)."""
+    w = (read_docs(spark, sf_dir)
+         .select("doc_id", F.explode(_words()).alias("w")))
+    lm = w.groupBy("w").agg(F.count("*").alias("c"))
+    tot = w.groupBy().agg(F.count("*").alias("tot"))
+    scored = (w.join(lm, "w")
+              .crossJoin(F.broadcast(tot))
+              .select("doc_id", (F.log2("tot") - F.log2("c")).alias("nlp")))
+    return scored.groupBy("doc_id").agg(
+        F.count("*").cast("bigint").alias("n_words"),
+        F.round(F.avg("nlp"), 6).alias("avg_neg_log2p"))
+
+
+SQL_UNIGRAM_LOGPROB = """
+WITH w AS (SELECT doc_id, UNNEST(STRING_SPLIT(text, ' ')) AS w
+           FROM documents),
+lm AS (SELECT w, COUNT(*) AS c FROM w GROUP BY 1),
+t AS (SELECT COUNT(*) AS tot FROM w)
+SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
+       ROUND(AVG(LOG2(t.tot) - LOG2(lm.c)), 6) AS avg_neg_log2p
+FROM w JOIN lm USING (w), t
+GROUP BY doc_id
+"""
+
+
+#: ASCII-only classes on purpose: Java regex \d and RE2 \d are both
+#: ASCII, so the same pattern string means the same thing to both engines
+_PII_EMAIL_RE = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
+_PII_PHONE_RE = r"[0-9]{3}-[0-9]{4}"
+
+
+def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PII detection + redaction counts (emails, phone-shaped numbers).
+    The synthetic corpus carries no PII, so the witness first splices
+    deterministic synthetic PII into a slice of the documents (same
+    expression on both engines) — the operator under test is the
+    count + redact stage: regexp_extract_all for per-kind counts,
+    chained regexp_replace for the redacted text (returned as its md5 so
+    the row stays scalar-hashable). Pure whole-stage-codegen built-ins;
+    at 100 TB this is a map-only pass with no shuffle."""
+    d = read_table(spark, sf_dir, "documents")
+    t2 = (F.when(F.col("doc_id") % 3 == 0,
+                 F.concat("text", F.lit(" contact u"),
+                          F.col("doc_id").cast("string"),
+                          F.lit("@example.com")))
+          .otherwise(F.col("text")))
+    t2 = (F.when(F.col("doc_id") % 5 == 0,
+                 F.concat(t2, F.lit(" call 555-01"),
+                          F.lpad((F.col("doc_id") % 100).cast("string"),
+                                 2, "0")))
+          .otherwise(t2))
+    redacted = F.regexp_replace(
+        F.regexp_replace(t2, _PII_EMAIL_RE, "<EMAIL>"),
+        _PII_PHONE_RE, "<PHONE>")
+    return d.select(
+        "doc_id",
+        F.size(F.regexp_extract_all(t2, F.lit(_PII_EMAIL_RE), 0))
+        .cast("bigint").alias("n_emails"),
+        F.size(F.regexp_extract_all(t2, F.lit(_PII_PHONE_RE), 0))
+        .cast("bigint").alias("n_phones"),
+        F.md5(redacted).alias("redacted_md5"))
+
+
+SQL_PII_SCRUB = f"""
+WITH t1 AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 3 = 0
+              THEN text || ' contact u' || CAST(doc_id AS VARCHAR)
+                   || '@example.com'
+              ELSE text END AS t2a
+  FROM documents),
+t AS (
+  SELECT doc_id,
+         CASE WHEN doc_id % 5 = 0
+              THEN t2a || ' call 555-01'
+                   || LPAD(CAST(doc_id % 100 AS VARCHAR), 2, '0')
+              ELSE t2a END AS t2
+  FROM t1)
+SELECT doc_id,
+       CAST(LEN(REGEXP_EXTRACT_ALL(t2, '{_PII_EMAIL_RE}')) AS BIGINT)
+           AS n_emails,
+       CAST(LEN(REGEXP_EXTRACT_ALL(t2, '{_PII_PHONE_RE}')) AS BIGINT)
+           AS n_phones,
+       MD5(REGEXP_REPLACE(REGEXP_REPLACE(t2, '{_PII_EMAIL_RE}', '<EMAIL>',
+                                         'g'),
+                          '{_PII_PHONE_RE}', '<PHONE>', 'g')) AS redacted_md5
+FROM t
+"""
+
+
+def length_histogram(spark: SparkSession, sf_dir: str,
+                     bucket: int = 64) -> DataFrame:
+    """Sequence-length distribution — the histogram a packing/curriculum
+    stage reads before choosing context budgets. Integer-div bucketing
+    (no float), single map-side-combinable groupBy."""
+    d = read_table(spark, sf_dir, "documents")
+    return (d.select(F.expr(f"n_chars div {bucket}").alias("len_bucket"),
+                     "n_chars")
+            .groupBy("len_bucket")
+            .agg(F.count("*").cast("bigint").alias("n_docs"),
+                 F.min("n_chars").alias("min_chars"),
+                 F.max("n_chars").alias("max_chars"),
+                 F.round(F.avg("n_chars"), 6).alias("avg_chars")))
+
+
+def sql_length_histogram(bucket: int = 64) -> str:
+    return f"""
+SELECT n_chars // {bucket} AS len_bucket,
+       CAST(COUNT(*) AS BIGINT) AS n_docs,
+       MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars,
+       ROUND(AVG(n_chars), 6) AS avg_chars
+FROM documents GROUP BY 1
+"""
+
+
 def ngram_topk(spark: SparkSession, sf_dir: str, n: int = 2,
                k: int = 50) -> DataFrame:
     """Corpus-level top-k word n-grams by document frequency — the
@@ -189,9 +433,10 @@ def bm25_topk(spark: SparkSession, sf_dir: str,
               terms: tuple = BM25_TERMS, k: int = 20) -> DataFrame:
     """Okapi BM25 document scoring for a term-set query (r06, staged
     registered in the r07 rotation) — the retrieval primitive corpus curation uses to pull
-    topical slices. Three shuffles: doc lengths, per-(doc, term) tf,
-    per-term df; the corpus scalars (avgdl, n_docs) ride a broadcast
-    single-row cross join — no driver collect. The
+    topical slices (and the missing sibling of the unigram-LM scorer
+    above). Three shuffles: doc lengths, per-(doc, term) tf, per-term df;
+    the corpus scalars (avgdl, n_docs) ride a broadcast single-row cross
+    join exactly like unigram_logprob's total — no driver collect. The
     term filter lands BEFORE the tf aggregate, so the scored stream is
     O(docs containing a query term), not O(corpus words). Deterministic
     top-k: (bm25 desc, doc_id) with both engines ranking the same
@@ -253,7 +498,7 @@ BIGRAM_LAMBDA = 0.8  # interpolation weight on the bigram term
 def bigram_logprob(spark: SparkSession, sf_dir: str,
                    lam: float = BIGRAM_LAMBDA) -> DataFrame:
     """Interpolated bigram language-model scoring (r07, staged for the
-    r08 rotation) — a corpus n-gram language model in the direction of
+    r08 rotation) — the next step up from :func:`unigram_logprob` toward
     the KenLM-style perplexity filters production curation runs (CCNet,
     Wenzek et al. 2019): P(w2|w1) = lam * c(w1 w2)/c(w1) +
     (1-lam) * c(w2)/total, scored as the per-document mean negative

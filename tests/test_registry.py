@@ -67,22 +67,24 @@ def test_oracle_keys_subset_of_queries():
 # is loud — the exact-membership discipline that stopped the r02/r04
 # silent evictions, carried into the explicit-window mechanism.
 EXPECTED_WINDOW_R09 = [
-    "iceberg_metadata_snapshots", "text_bigram_logprob", "text_zipf_slope",
-    "dedup_edit_verify", "curation_domain_cap", "tpch_q3", "tpch_q5",
-    "funnel_steps", "graph_triangles", "json_variant", "text_tfidf_topk",
-    "dedup_edit_verify_lsh", "graph_triangles_lsh",
-    "agg_approx_distinct", "agg_salted_skew", "curation_contamination",
-    "curation_mixture_sample", "curation_score_normalize", "curation_split",
-    "explode_array", "graph_degrees", "graph_degrees_lsh", "graph_pagerank",
-    "graph_pagerank_lsh", "join_range_bucketed", "join_salted",
-    "kg_canonical_triples", "kg_entity_pagerank", "kg_extract_text",
-    "kg_links", "kg_mentions", "kg_sentences", "kg_triple_metrics",
-    "kg_triples_raw", "kg_web_pages", "mm_audio_windows",
-    "mm_binary_metadata", "mm_frame_sample", "mm_media_features",
-    "pack_sequences", "pack_sequences_sharded", "pivot_event_type",
-    "sample_frac", "sample_stratified", "scan_project",
-    "stream_interval_join_batch", "text_ngram_topk", "text_repetition",
-    "text_token_stats", "text_winnow_fingerprint",
+    "kg_canonical_triples", "kg_extract_text", "kg_links", "kg_mentions",
+    "kg_sentences", "kg_triples_raw", "kg_web_pages",
+    "kg_entity_pagerank", "kg_triple_metrics",
+    "join_null_safe", "join_range_bucketed",
+    "mm_audio_windows", "mm_binary_metadata", "mm_frame_sample",
+    "mm_media_features", "pack_sequences", "pack_sequences_sharded",
+    "sample_stratified", "scan_project", "stream_session_batch",
+    "text_fingerprint", "text_langid_predict", "text_langid_scores",
+    "text_quality", "text_token_stats", "text_winnow_fingerprint",
+    "udaf_weighted_avg", "unpivot_measures", "window_ntile_percent",
+    "agg_approx_distinct", "agg_grouping_sets", "agg_salted_skew",
+    "agg_stats_funcs", "array_funcs", "conditional_funcs",
+    "curation_contamination", "curation_mixture_sample",
+    "curation_quality_filter", "curation_score_normalize",
+    "curation_split", "date_funcs", "dedup_clusters_incremental",
+    "distinct_rows", "explode_array", "graph_degrees",
+    "graph_degrees_lsh", "graph_pagerank", "graph_pagerank_lsh",
+    "iceberg_cluster_scan", "iceberg_snapshot_scan",
 ]
 
 
