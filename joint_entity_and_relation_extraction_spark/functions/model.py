@@ -51,7 +51,6 @@ NDIRS_H = 2 * H  # BiLSTM output width
 # CoNLL04-family label sets ([PK-H], used as label vocabulary only)
 ENT_LABELS = ["PEOP", "ORG", "LOC", "OTHER"]
 REL_LABELS = ["WORK_FOR", "LIVE_IN", "LOCATED_IN", "ORGBASED_IN", "KILL"]
-NONE_REL = len(REL_LABELS)  # index of the NONE class
 
 # BIOES tag space: O + {B,I,E,S} x entity type
 TAG_O = 0

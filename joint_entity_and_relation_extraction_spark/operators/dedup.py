@@ -23,13 +23,21 @@ from ..sources.io import read_docs, read_table
 
 
 def _shingles_expr(n: int):
-    """Distinct word n-gram shingles as array<string> — one whole-stage-
-    codegen projection (split → transform over index sequence → slice →
-    array_distinct), guarded for texts shorter than n words."""
+    """Distinct word n-gram shingles as array<string>, guarded for texts
+    shorter than n words. The n shifted word slices are zipped and each
+    zipped row joined (split → n slices → arrays_zip → concat_ws →
+    array_distinct), so a text is split a fixed number of times; the
+    ``transform`` lambda only reads struct fields (Spark evaluates lambdas
+    interpreted, and a ``split`` in the lambda body would run once per
+    word position)."""
+    w = "split(text, ' ')"
+    length = f"size({w}) - {n - 1}"
+    slices = ", ".join(f"slice({w}, {k}, {length})" for k in range(1, n + 1))
+    fields = ", ".join(f"z.`{k}`" for k in range(n))
     return F.expr(
-        f"CASE WHEN size(split(text, ' ')) >= {n} THEN "
-        f"array_distinct(transform(sequence(1, size(split(text, ' ')) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(split(text, ' '), i, {n})))) "
+        f"CASE WHEN size({w}) >= {n} THEN "
+        f"array_distinct(transform(arrays_zip({slices}), "
+        f"z -> concat_ws(' ', {fields}))) "
         f"ELSE array() END"
     )
 
@@ -108,14 +116,28 @@ def _capped_groups(ex: DataFrame, key: str, max_df: int) -> DataFrame:
 def _in_group_pairs(grouped: DataFrame, count_col: str) -> DataFrame:
     """(d1, d2, count_col): every pair d1 < d2 inside each sorted ``ds``
     group of :func:`_capped_groups`, counted over the groups that hold
-    both. Pairs come from a codegen'd nested transform over the doc
-    array, then one map-side-combinable groupBy count."""
-    pair_expr = F.expr(
-        "flatten(transform(ds, (x, i) -> "
-        "transform(slice(ds, i + 2, size(ds)), "
-        "y -> named_struct('d1', x, 'd2', y))))")
-    return (grouped.select(F.explode(pair_expr).alias("p"))
-            .groupBy(F.col("p.d1").alias("d1"), F.col("p.d2").alias("d2"))
+    both.
+
+    Each group member becomes ONE ``(d1, tail)`` row, ``tail`` being the
+    members after it (``posexplode`` + ``slice``); those rows are
+    shuffled once on d1 and exploded into pairs inside that partitioning,
+    where the (d1, d2) count runs with no second exchange (hash
+    partitioning on d1 already clusters every (d1, d2) key). The shuffle
+    moves one row per member, not one per pair, and no lambda is
+    involved: Spark 4.1.2 evaluates ``transform`` lambdas interpreted
+    (``ArrayTransform`` is ``CodegenFallback``), so a lambda call per
+    pair fragment would cost more than the count itself.
+
+    Hot-key bound: :func:`_capped_groups` caps every group at max_df
+    docs, so a tail holds at most max_df - 1 ids and the work per d1
+    partition key is at most |capped shingles(d1)| x (max_df - 1)
+    pair fragments."""
+    tails = (grouped.select(F.posexplode("ds").alias("pos", "d1"), "ds")
+             .filter(F.col("pos") < F.size("ds") - 1)
+             .select("d1", F.expr("slice(ds, pos + 2, size(ds))").alias("tail")))
+    return (tails.repartition("d1")
+            .select("d1", F.explode("tail").alias("d2"))
+            .groupBy("d1", "d2")
             .agg(F.count("*").alias(count_col)))
 
 

@@ -14,11 +14,6 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = ("run_id string, stage string, part string, "
-                  "input_rows long, output_rows long, checksum long, "
-                  "wall_ms long, attempted_at timestamp")
-
-
 def _checksum(cols):
     return F.sum(F.crc32(F.to_json(F.struct(*cols)).cast("binary"))).alias("checksum")
 

@@ -24,13 +24,6 @@ from pyspark.sql.types import (ArrayType, FloatType, IntegerType, LongType,
 
 from .webpages import web_pages
 
-BINARY_META_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("n_bytes", LongType(), False),
-    StructField("sha256", StringType(), False),
-    StructField("magic", StringType(), True),
-])
-
 
 def binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over an opaque binary column — pure built-ins

@@ -62,6 +62,13 @@ def _combine(existing: DataFrame, delta: DataFrame) -> DataFrame:
                          "sources")
 
 
+def _materialized_delta(new_canon_with_ts: DataFrame) -> DataFrame:
+    """The batch's G1 delta, evaluated once: it feeds both the ``preds``
+    collect and the write, and each evaluation would rerun the batch's
+    chain tail and timestamp scan (CLAUDE.md shared-subtree invariant)."""
+    return aggregate_triples(new_canon_with_ts).localCheckpoint(eager=True)
+
+
 def merge_triple_evidence(spark: SparkSession, table_root: str,
                           new_canon_with_ts: DataFrame) -> DataFrame:
     """Merge a new evidence batch into the IcebergLite triples table.
@@ -72,7 +79,7 @@ def merge_triple_evidence(spark: SparkSession, table_root: str,
     the batch's predicate set, and the combine shuffles on (subj, pred,
     obj) — the same key layout the table is bucketed by.
     """
-    delta = aggregate_triples(new_canon_with_ts)
+    delta = _materialized_delta(new_canon_with_ts)
     preds = [r.pred for r in delta.select("pred").distinct().collect()]
     if not preds:
         return delta
@@ -113,7 +120,7 @@ def merge_triple_evidence_upsert(spark: SparkSession, table_root: str,
     :func:`merge_triple_evidence`; the two paths are equality-tested).
     Every commit re-records TRIPLE_STATS_COLS unit bounds so range
     pruning survives the rewrite."""
-    delta = aggregate_triples(new_canon_with_ts)
+    delta = _materialized_delta(new_canon_with_ts)
     key = ["subj", "pred", "obj"]
     if not il.exists(table_root):
         out = delta.repartition(F.col("pred"))

@@ -88,17 +88,6 @@ def windowed_lang_counts(pages: DataFrame, window: str = "10 minutes",
     )
 
 
-def sliding_domain_counts(pages: DataFrame) -> DataFrame:
-    domain = F.regexp_extract("url", r"https://([^/]+)/", 1)
-    return (
-        pages.withWatermark("warc_ts", "1 hour")
-        .groupBy(F.window("warc_ts", "10 minutes", "5 minutes").alias("w"),
-                 domain.alias("domain"))
-        .agg(F.count("*").alias("n_pages"))
-        .select(F.col("w.start").alias("w_start"), "domain", "n_pages")
-    )
-
-
 def session_windows(pages: DataFrame, gap: str = "30 minutes") -> DataFrame:
     domain = F.regexp_extract("url", r"https://([^/]+)/", 1)
     return (

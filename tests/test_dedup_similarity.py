@@ -218,6 +218,58 @@ def test_ngram_jaccard_oracle_parity_with_cap(spark, hot_shingle_dir):
         == oracle_rows
 
 
+#: texts on which word shingling can go wrong: empty, shorter than n,
+#: double / leading / trailing spaces, repeats (distinct shingles only)
+SHINGLE_EDGE_TEXTS = ["", "a", "a b", "a  b c", " a b c", "a b c ",
+                      "  lead and trail  ", "x x x x x x",
+                      "a b a b a b a", "one two three four five six seven"]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def test_shingles_expr_matches_oracle_shingle_cte(spark, n):
+    """_shingles_expr(n) and the shingle CTE of sql_ngram_jaccard give
+    the same distinct shingles per document, edge-case texts included."""
+    import duckdb
+
+    texts = pd.DataFrame({"doc_id": range(len(SHINGLE_EDGE_TEXTS)),
+                          "text": SHINGLE_EDGE_TEXTS})
+    got = sorted(
+        (r.doc_id, s) for r in spark.createDataFrame(texts)
+        .select("doc_id", DD._shingles_expr(n).alias("sh")).collect()
+        for s in r.sh)
+    assert len(got) == len(set(got))  # array_distinct per document
+    sql = DD.sql_ngram_jaccard(n=n)
+    cte = sql[sql.index("WITH sh_all"):sql.index("),\nrare")] + ")"
+    con = duckdb.connect()
+    con.register("documents", texts)
+    want = sorted((int(d), s) for d, s in con.execute(
+        cte + " SELECT doc_id, shingle FROM sh_all").fetchall())
+    assert got == want
+
+
+def test_in_group_pairs_match_brute_force_counter(spark):
+    """_in_group_pairs over _capped_groups equals a brute-force Python
+    in-group pair counter: singleton and two-doc groups, a group of
+    exactly max_df docs (kept), one of max_df + 1 (dropped) and one doc
+    that sits in many groups."""
+    from collections import Counter
+    from itertools import combinations
+
+    max_df = 5
+    groups = {"single": [7], "two": [3, 9], "full": [1, 2, 3, 4, 5],
+              "over": [10, 11, 12, 13, 14, 15],
+              **{f"hub{k}": [0, 20 + k, 21 + k] for k in range(6)}}
+    stream = [(k, d) for k, ds in groups.items() for d in ds]
+    want = Counter(
+        pair for ds in groups.values() if len(ds) <= max_df
+        for pair in combinations(sorted(ds), 2))
+    ex = spark.createDataFrame(stream, "k string, doc_id long")
+    got = {(r.d1, r.d2): r.c for r in DD._in_group_pairs(
+        DD._capped_groups(ex, "k", max_df), "c").collect()}
+    assert got == dict(want)
+    assert got[(0, 21)] == 2 and sum(d1 == 0 for d1, _ in got) == 7
+
+
 def test_ann_ivf_finds_true_near_neighbors(spark, clustered_dir):
     """IVF (coarse k-means + inverted-list probe): a true near-duplicate
     (cos≈0.95+) lands in the query's own centroid list, so probing

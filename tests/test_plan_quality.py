@@ -92,22 +92,45 @@ def test_range_bucketed_join_is_equi_not_nested_loop(spark):
     assert "HashJoin" in p or "SortMergeJoin" in p
 
 
+def _assert_pair_count_single_d1_exchange(p):
+    """The in-group pair count (_in_group_pairs) is fed by exactly ONE
+    exchange, of (d1, tail) rows on d1 alone; hash partitioning on d1
+    already clusters the (d1, d2) count, so there is no exchange between
+    its partial and final aggregate and none on (d1, d2)."""
+    import re
+    lines = p.splitlines()
+    final, partial = ([i for i, ln in enumerate(lines)
+                       if "keys=[d1#" in ln and f"functions=[{fn}(1)]" in ln]
+                      for fn in ("count", "partial_count"))
+    assert len(final) == len(partial) == 1, p
+    final, partial = final[0], partial[0]
+    assert final < partial and not any(
+        "Exchange" in ln for ln in lines[final:partial]), p
+    feed = next(ln for ln in lines[partial:] if "Exchange" in ln)
+    assert re.search(r"Exchange hashpartitioning\(d1#\d+L?, \d+\)", feed), p
+    assert len(re.findall(r"Exchange hashpartitioning\(d1#", p)) == 1, p
+    assert not re.search(r"Exchange hashpartitioning\([^)]*\bd2#", p), p
+    assert "_groupingexpression" not in p, p
+
+
 def test_winnow_pairs_plan_is_single_shuffle_in_group_pairs(spark):
-    """r08 winnowing pair generation: ONE shuffle of the fingerprint
-    stream (groupBy fp_hash collecting the df-capped sorted doc list),
-    pairs generated INSIDE each group by a codegen'd nested transform —
-    no join at all (the r07 self-join re-shuffled the stream twice
-    more). Pin: no join of any kind, map-side partial aggregation on
-    BOTH shuffles (partial_collect_list for the grouping,
-    partial_count for the pair count), and the in-group pair expansion
-    present — the shape that keeps it O(n·max_df) at corpus scale."""
+    """Winnowing pair generation: ONE shuffle of the fingerprint stream
+    (groupBy fp_hash collecting the df-capped sorted doc list), then one
+    (d1, tail) row per group member shuffled once on d1 and exploded into
+    pairs inside that partitioning — no join at all (a self-join
+    re-shuffled the stream twice more) and no lambda (Spark evaluates
+    ``transform`` lambdas interpreted). Pin: no join of any kind,
+    partial_collect_list below the grouping shuffle, partial_count
+    for the pair count, exactly one d1 exchange feeding it and none on
+    (d1, d2) — the shape that keeps it O(n·max_df) at corpus scale."""
     from joint_entity_and_relation_extraction_spark.operators import dedup as DD
 
     p = plan_str(DD.winnow_pairs(spark, SF001))
     assert "NestedLoop" not in p and "Cartesian" not in p
     assert "Join" not in p  # pair generation is in-group, not a self-join
-    assert "partial_count" in p  # map-side combine before the pair shuffle
-    assert "flatten(transform" in p  # in-group C(n,2) expansion
+    assert "partial_collect_list" in p
+    assert "partial_count" in p  # map-side combine of the pair count
+    _assert_pair_count_single_d1_exchange(p)
     # hot-key memory safety (_capped_groups): the df-cap must truncate
     # via WindowGroupLimit — with a PARTIAL pass below the exchange (a
     # hot key then ships <= max_df + 1 rows per map task) — so no
@@ -120,9 +143,10 @@ def test_winnow_pairs_plan_is_single_shuffle_in_group_pairs(spark):
 def test_ngram_pairs_capped_groups_are_memory_bounded(spark):
     """Same _capped_groups witness for the ngram shingle path (the base
     of graph_degrees/pagerank/triangles and the dedup consumers):
-    WindowGroupLimit truncation present, no string self-join. The
-    grouped table is localCheckpointed (feeds pairs AND sizes), so the
-    gate builds the frame with checkpointing bypassed to see the full
+    WindowGroupLimit truncation present, no string self-join, and the
+    same single-d1-exchange pair count as winnow_pairs. The grouped
+    table is localCheckpointed (feeds pairs AND sizes), so the gate
+    builds the frame with checkpointing bypassed to see the full
     operator graph."""
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
@@ -135,7 +159,7 @@ def test_ngram_pairs_capped_groups_are_memory_bounded(spark):
     finally:
         CDF.localCheckpoint = real_ckpt
     assert "WindowGroupLimit" in p
-    assert "partial_count" in p
+    _assert_pair_count_single_d1_exchange(p)
 
 
 def test_curation_windows_share_one_exchange(spark):
