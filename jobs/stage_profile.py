@@ -61,9 +61,6 @@ class JobGroups:
         finally:
             self.sc.setJobGroup(BETWEEN, "between layers")
 
-    def count(self, name: str, value: float) -> None:
-        pass
-
 
 def _log_files(log_dir: str) -> list[str]:
     (app,) = glob.glob(os.path.join(log_dir, "*"))
