@@ -1,13 +1,19 @@
-"""Canonicalization C2–C4 (SURVEY.md §2.3): connected components as
-GraphFrames-style iterative DataFrame joins, then canonical-id rewrite of
-triple endpoints.
+"""Canonicalization C2–C4 (SURVEY.md §2.3): connected components over the
+linking edges, then canonical-id rewrite of triple endpoints.
 
-Distributed algorithm: `_star_contract`, alternating large-star/small-star
-edge contraction (Kiveris et al., "Connected Components in MapReduce and
-Beyond", MR-CC) — O(log n) rounds on ANY graph shape, including the
-chain-shaped near-dup graphs `dedup_clusters` can produce at corpus
-scale. Each round localCheckpoints to truncate lineage (SURVEY.md §4.3);
-it is property-tested equal to driver union-find.
+C2/C3: `connected_components` union-finds dictionary-sized edge sets on
+the driver; past DRIVER_CC_MAX_EDGES it runs `_star_contract`,
+alternating large-star/small-star edge contraction (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", MR-CC) — O(log n) rounds
+on ANY graph shape, including the chain-shaped near-dup graphs
+`dedup_clusters` can produce at corpus scale. Each round localCheckpoints
+to truncate lineage (SURVEY.md §4.3); it is property-tested equal to
+driver union-find.
+
+C4: `canonical_triples_by_surface` is the one Spark rewrite. The
+per-mention join is the single-process oracle's
+(`oracle.pipeline_local.canonicalize`); the row-level gates compare
+against it.
 """
 
 from __future__ import annotations
@@ -26,8 +32,7 @@ from pyspark.sql import functions as F
 DRIVER_CC_MAX_EDGES = 2_000_000
 
 
-def connected_components(edges: DataFrame, max_iter: int = 30,
-                         force_distributed: bool = False) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src:long, dst:long) undirected → labels(node:long,
     component:long) where component = min node id in the component.
     Nodes appearing in no edge are absent (callers coalesce to self).
@@ -42,11 +47,10 @@ def connected_components(edges: DataFrame, max_iter: int = 30,
     (round-1 probe); the eager-false localCheckpoint makes the count and
     the following collect share one lineage evaluation instead of
     recomputing the upstream resolution twice (ADVICE r02)."""
-    if not force_distributed:
-        edges = edges.localCheckpoint(eager=False)
-        if edges.count() <= DRIVER_CC_MAX_EDGES:
-            return _driver_union_find(edges.sparkSession, edges.collect())
-    return _star_contract(edges, max_iter)
+    edges = edges.localCheckpoint(eager=False)
+    if edges.count() <= DRIVER_CC_MAX_EDGES:
+        return _driver_union_find(edges.sparkSession, edges.collect())
+    return _star_contract(edges)
 
 
 def _driver_union_find(spark, edge_rows) -> DataFrame:
@@ -140,18 +144,6 @@ def _star_contract(edges: DataFrame, max_iter: int = 30) -> DataFrame:
     )
 
 
-def assign_components(links: DataFrame, labels: DataFrame) -> DataFrame:
-    """links + cc labels → (url, sent_id, m_id, canon_id); nodes outside
-    any edge are their own component."""
-    return (
-        links.join(labels, links.node_id == labels.node, "left")
-        .select(
-            "url", "sent_id", "m_id", "alias_norm",
-            F.coalesce(F.col("component"), F.col("node_id")).alias("canon_id"),
-        )
-    )
-
-
 def surface_canon_map(resolution: DataFrame, labels: DataFrame) -> DataFrame:
     """(alias_norm → canon_id): resolution nodes rewritten through the CC
     labels; nodes outside any edge stay themselves. Dictionary-sized."""
@@ -166,7 +158,7 @@ def surface_canon_map(resolution: DataFrame, labels: DataFrame) -> DataFrame:
 def canonical_triples_by_surface(triples_raw: DataFrame,
                                  canon_map: DataFrame,
                                  raw_surfaces: DataFrame | None = None) -> DataFrame:
-    """C4 fast path: triples carry their subject/object SURFACE strings, so
+    """C4: triples carry their subject/object SURFACE strings, so
     canonical ids resolve via two broadcast joins against a
     dictionary-sized (raw surface → norm, canon_id) map — the 10^12-row
     triple stream is never shuffled AND never regexed: normalization (two
@@ -176,9 +168,10 @@ def canonical_triples_by_surface(triples_raw: DataFrame,
     entities, and sharing one surface node would weld every such mention
     corpus-wide into a single bogus canonical id; the inner joins then
     drop their triples, exactly as the normalize-per-row path did.
-    Identical output to the mention-join path (canonical_triples below,
-    parity-tested); fall back to that path if the surface map ever
-    outgrows broadcast range."""
+    Identical rows to the oracle's per-mention join
+    (oracle.pipeline_local.canonicalize), with and without
+    ``raw_surfaces`` (tests/test_linking.py). The surface map must fit a
+    broadcast: it is bounded by the mention vocabulary, not the corpus."""
     from .linking import normalize_col
 
     if raw_surfaces is not None:
@@ -206,28 +199,6 @@ def canonical_triples_by_surface(triples_raw: DataFrame,
         F.col("canon_id").alias("obj")))
     return (
         triples_raw.join(subj_map, "subj_surface").join(obj_map, "obj_surface")
-        .select("url", "sent_id", "subj", "subj_norm", "pred",
-                "obj", "obj_norm", "score")
-    )
-
-
-def canonical_triples(triples_raw: DataFrame, assigned: DataFrame) -> DataFrame:
-    """C4: rewrite triple endpoints to canonical component ids via two
-    equi-joins on (url, sent_id, m_id) — sort-merge at scale, broadcast
-    when the mention side is small (left to Catalyst/AQE)."""
-    subj = assigned.select(
-        "url", "sent_id", F.col("m_id").alias("subj_m"),
-        F.col("canon_id").alias("subj"),
-        F.col("alias_norm").alias("subj_norm"))
-    obj = assigned.select(
-        "url", "sent_id", F.col("m_id").alias("obj_m"),
-        F.col("canon_id").alias("obj"),
-        F.col("alias_norm").alias("obj_norm"))
-    return (
-        triples_raw
-        .join(subj, ["url", "sent_id", "subj_m"])
-        .join(obj, ["url", "sent_id", "obj_m"])
-        .filter((F.col("subj_norm") != "") & (F.col("obj_norm") != ""))
         .select("url", "sent_id", "subj", "subj_norm", "pred",
                 "obj", "obj_norm", "score")
     )

@@ -3,9 +3,11 @@ writes lineage + metrics rows enabling checkpoint-resume of any stage").
 
 A lineage row = (run_id, stage, partition value, rows, order-insensitive
 checksum, wall time, attempted_at). The checksum is a sum of per-row
-crc32 over the canonical JSON of the row — computed JVM-side in the same
-aggregation that counts rows, so lineage costs one extra expression, not
-an extra pass."""
+crc32 over the canonical JSON of the row, computed JVM-side in the same
+aggregation that counts rows. That aggregation is its own pass: callers
+run it over the committed table re-read after the write, not over the
+write's input. ``input_rows`` is always null; the column keeps the
+lineage table's schema stable."""
 
 from __future__ import annotations
 
@@ -19,8 +21,7 @@ def _checksum(cols):
 
 
 def lineage_rows(df: DataFrame, run_id: str, stage: str,
-                 part_col, wall_ms: int = 0,
-                 input_rows: int | None = None) -> DataFrame:
+                 part_col, wall_ms: int = 0) -> DataFrame:
     """Aggregate one lineage row per partition value of ``part_col``."""
     cols = [F.col(c) for c in df.columns]
     agg = df.groupBy(part_col.cast("string").alias("part")).agg(
@@ -29,7 +30,7 @@ def lineage_rows(df: DataFrame, run_id: str, stage: str,
         F.lit(run_id).alias("run_id"),
         F.lit(stage).alias("stage"),
         "part",
-        F.lit(input_rows).cast("long").alias("input_rows"),
+        F.lit(None).cast("long").alias("input_rows"),
         "output_rows",
         "checksum",
         F.lit(wall_ms).cast("long").alias("wall_ms"),

@@ -194,22 +194,13 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
 
 
 def resolution_edges(resolution: DataFrame) -> DataFrame:
-    """C1 from the resolution table alone — identical edge set to
-    link_edges(link_mentions(...)) because edges are per-surface facts."""
+    """C1: same-entity evidence edges (surface_node ↔ entity) for every
+    linked surface, from the resolution table alone — edges are
+    per-surface facts, so the mention stream is never read. Ambiguous
+    aliases connect their entities through the shared surface node,
+    which canonicalization then merges."""
     return (
         resolution.filter(F.col("entity_id").isNotNull())
-        .select(F.col("surface_node").alias("src"),
-                F.col("entity_id").alias("dst"))
-        .dropDuplicates()
-    )
-
-
-def link_edges(links: DataFrame) -> DataFrame:
-    """C1: same-entity evidence edges (surface_node ↔ entity) for every
-    linked surface — ambiguous aliases connect their entities through the
-    shared surface node, which canonicalization then merges."""
-    return (
-        links.filter(F.col("entity_id").isNotNull())
         .select(F.col("surface_node").alias("src"),
                 F.col("entity_id").alias("dst"))
         .dropDuplicates()

@@ -865,18 +865,16 @@ def cluster_by(spark: SparkSession, root: str, sort_cols: list[str],
 
 
 def merge_upsert(spark: SparkSession, updates: DataFrame, root: str,
-                 key_cols: list[str],
-                 stats_cols: list[str] | None = None) -> int:
+                 key_cols: list[str]) -> int:
     """MERGE INTO (copy-on-write upsert): rows of ``updates`` replace
     current rows with the same key; unmatched keys insert. Commits one
     new snapshot containing (current ANTI-JOIN updates-keys) UNION
     updates — real Iceberg's copy-on-write MERGE, which rewrites only
     the files holding matched rows. When the table's partition columns
-    are a subset of ``key_cols`` (r05: the shape the triple table uses —
-    pred-partitioned, (subj, pred, obj)-keyed), a matched row can only
-    live in a partition the updates touch, so ONLY those partitions are
-    read and rewritten and every untouched unit carries over — the merge
-    cost scales with the batch, not the table. Otherwise the rewrite is
+    are a subset of ``key_cols``, a matched row can only live in a
+    partition the updates touch, so ONLY those partitions are read and
+    rewritten and every untouched unit carries over — the merge cost
+    scales with the batch, not the table. Otherwise the rewrite is
     table-wide (compact-sized). Older snapshots still time-travel to the
     pre-merge rows.
 
@@ -887,11 +885,10 @@ def merge_upsert(spark: SparkSession, updates: DataFrame, root: str,
 
     ``updates`` must be key-unique (enforced: ambiguous merges raise).
 
-    ``stats_cols`` records per-unit [min, max] bounds for the rewritten
-    units; when omitted, the columns already carrying unit_stats in the
-    manifest are re-derived automatically, so where_range data skipping
-    survives a merge instead of silently degrading to a full scan
-    (ADVICE r04).
+    The columns already carrying unit_stats in the manifest get their
+    per-unit [min, max] bounds re-derived for the rewritten units, so
+    where_range data skipping survives a merge instead of silently
+    degrading to a full scan (ADVICE r04).
     """
     from pyspark.sql import functions as F
 
@@ -947,9 +944,8 @@ def merge_upsert(spark: SparkSession, updates: DataFrame, root: str,
     if partition_by:
         merged = merged.repartition(*[F.col(c) for c in partition_by])
     new_units = _write_snapshot(merged, root, _new_token(), partition_by)
-    want_stats = stats_cols if stats_cols is not None else _stats_cols_of(m)
-    stats = (_collect_unit_stats(root, new_units, want_stats)
-             if want_stats else {})
+    stats = (_collect_unit_stats(root, new_units, _stats_cols_of(m))
+             if _stats_cols_of(m) else {})
     blooms = (_collect_unit_blooms(root, new_units, _bloom_cols_of(m))
               if _bloom_cols_of(m) else {})
     with _meta_lock(root):

@@ -485,6 +485,35 @@ def test_column_stats_range_pruning(spark, tbl):
     assert sorted(r.v for r in both.collect()) == [1, 9, 55]
 
 
+def test_merge_upsert_keeps_range_skipping_without_stats_cols(spark, tbl):
+    """merge_upsert re-derives unit bounds for the columns the manifest
+    already carries stats for: after a partition-scoped merge every
+    current unit still has [min, max] bounds, and a where_range read
+    skips the other partition's files with exact rows."""
+    import json
+
+    il.append(_df(spark, [("a", 1), ("a", 9)]), tbl, ["k"], stats_cols=["v"])
+    il.append(_df(spark, [("b", 100), ("b", 190)]), tbl, ["k"],
+              stats_cols=["v"])
+    il.merge_upsert(spark, _df(spark, [("a", 9), ("a", 50)]), tbl,
+                    ["k", "v"])
+    assert il.snapshots(tbl)[-1]["operation"] == "merge"
+    with open(os.path.join(tbl, "manifest.json")) as f:
+        m = json.load(f)
+    units = m["snapshots"][-1]["units"]
+    assert all("v" in m["unit_stats"].get(u, {}) for u in units)
+    full = il.read(spark, tbl)
+    for lo, hi, want in ((100, 200, [100, 190]), (0, 60, [1, 9, 50])):
+        pruned = il.read(spark, tbl, where_range={"v": (lo, hi)})
+        other = "k=a" if lo == 100 else "k=b"
+        assert pruned.inputFiles() and all(
+            other not in f for f in pruned.inputFiles())
+        assert len(pruned.inputFiles()) < len(full.inputFiles())
+        rows = pruned.filter(F.col("v").between(lo, hi))
+        assert sorted(r.v for r in rows.collect()) == want == sorted(
+            r.v for r in full.filter(F.col("v").between(lo, hi)).collect())
+
+
 def test_cluster_by_makes_range_skipping_selective(spark, tmp_path):
     """Sort-order rewrite: arrival-order appends each span the whole
     value range (where_range can prove nothing); after cluster_by the

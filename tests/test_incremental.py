@@ -45,18 +45,26 @@ def test_two_batch_merge_equals_one_shot(spark, canon_with_ts, tmp_path):
     got = _key(il.read(spark, root))
     want = _key(INC.aggregate_triples(canon_with_ts))
     assert got == want and len(got) > 100
+    # one partition-overwrite snapshot per merge
+    assert [s["operation"] for s in il.snapshots(root)] == [
+        "overwrite", "overwrite"]
 
 
 def test_merge_touches_only_batch_partitions(spark, canon_with_ts, tmp_path):
     root = str(tmp_path / "triples2")
     INC.merge_triple_evidence(spark, root, canon_with_ts)
     snaps_before = len(il.snapshots(root))
+    units_before = set(il.snapshots(root)[-1]["units"])
     one_pred = canon_with_ts.filter(F.col("pred") == "KILL").limit(50)
     INC.merge_triple_evidence(spark, root, one_pred)
-    added = il.snapshots(root)[-1]["added"]
+    last = il.snapshots(root)[-1]
     assert len(il.snapshots(root)) == snaps_before + 1
-    assert all("pred=KILL" in u for u in added)
-
+    # rewritten units: only the touched predicate
+    assert all("pred=KILL" in u for u in last["added"])
+    # every OTHER partition's unit carried into the new snapshot unchanged
+    untouched_before = {u for u in units_before if "pred=KILL" not in u}
+    untouched_after = {u for u in last["units"] if "pred=KILL" not in u}
+    assert untouched_after == untouched_before and untouched_before
 
 
 def test_merge_of_new_preds_into_existing_table_equals_batch_aggregate(
@@ -75,8 +83,7 @@ def test_merge_of_new_preds_into_existing_table_equals_batch_aggregate(
     assert rows[0] == rows[1] and len(rows[0]) > 100
 
 
-@pytest.mark.parametrize("merge", [INC.merge_triple_evidence,
-                                   INC.merge_triple_evidence_upsert])
+@pytest.mark.parametrize("merge", [INC.merge_triple_evidence])
 def test_merge_evaluates_its_batch_once(spark, canon_with_ts, tmp_path,
                                         merge):
     """The batch's G1 delta feeds the preds collect and the write; a
@@ -96,68 +103,3 @@ def test_merge_evaluates_its_batch_once(spark, canon_with_ts, tmp_path,
         merge(spark, root, part.filter(counted("url")))
         assert seen.value - before == part.count() > 0
 
-
-def test_merge_upsert_path_equals_one_shot(spark, canon_with_ts, tmp_path):
-    """The MERGE INTO fold (VERDICT r04 item 6) reproduces the one-shot
-    aggregation exactly, commits 'merge' snapshots (not overwrites), and
-    carries every untouched predicate partition into the new snapshot BY
-    REFERENCE — the partition-scoped CoW rewrite."""
-    root = str(tmp_path / "triples_m")
-    b1 = canon_with_ts.filter(F.crc32(F.col("url").cast("binary")) % 2 == 0)
-    b2 = canon_with_ts.filter(F.crc32(F.col("url").cast("binary")) % 2 == 1)
-    INC.merge_triple_evidence_upsert(spark, root, b1)
-    INC.merge_triple_evidence_upsert(spark, root, b2)
-    got = _key(il.read(spark, root))
-    want = _key(INC.aggregate_triples(canon_with_ts))
-    assert got == want and len(got) > 100
-    assert il.snapshots(root)[-1]["operation"] == "merge"
-
-
-def test_merge_upsert_rewrites_only_touched_partitions(
-        spark, canon_with_ts, tmp_path):
-    root = str(tmp_path / "triples_m2")
-    INC.merge_triple_evidence_upsert(spark, root, canon_with_ts)
-    units_before = set(il.snapshots(root)[-1]["units"])
-    one_pred = canon_with_ts.filter(F.col("pred") == "KILL").limit(50)
-    INC.merge_triple_evidence_upsert(spark, root, one_pred)
-    last = il.snapshots(root)[-1]
-    assert last["operation"] == "merge"
-    # rewritten units: only the touched predicate
-    assert all("pred=KILL" in u for u in last["added"])
-    # every OTHER partition's unit carried over by reference (no rewrite)
-    untouched_before = {u for u in units_before if "pred=KILL" not in u}
-    untouched_after = {u for u in last["units"] if "pred=KILL" not in u}
-    assert untouched_after == untouched_before and untouched_before
-
-
-def test_merge_upsert_keeps_stats_skipping_alive(
-        spark, canon_with_ts, tmp_path):
-    """After a merge the manifest must still carry unit bounds for
-    TRIPLE_STATS_COLS, and a range read outside the recorded bounds must
-    prune units at the manifest (skipped-unit count asserted)."""
-    root = str(tmp_path / "triples_m3")
-    b1 = canon_with_ts.filter(F.crc32(F.col("url").cast("binary")) % 2 == 0)
-    b2 = canon_with_ts.filter(F.crc32(F.col("url").cast("binary")) % 2 == 1)
-    INC.merge_triple_evidence_upsert(spark, root, b1)
-    INC.merge_triple_evidence_upsert(spark, root, b2)
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(root, "manifest.json")) as f:
-        m = _json.load(f)
-    cur_units = m["snapshots"][-1]["units"]
-    with_stats = [u for u in cur_units
-                  if set(m.get("unit_stats", {}).get(u, {}))
-                  >= set(INC.TRIPLE_STATS_COLS)]
-    assert with_stats == cur_units  # merge re-recorded bounds everywhere
-    # a predicate-count threshold above every recorded max prunes all units
-    top = max(int(m["unit_stats"][u]["evidence_count"][1])
-              for u in cur_units)
-    full_files = len(il.read(spark, root).inputFiles())
-    pruned = il.read(spark, root,
-                     where_range={"evidence_count": (top + 1, None)})
-    assert len(pruned.inputFiles()) == 0 < full_files
-    # and an in-range bound keeps the matching units readable (exactness:
-    # stats only ever skip provably-non-matching units)
-    some = il.read(spark, root, where_range={"evidence_count": (top, None)})
-    assert some.filter(F.col("evidence_count") == top).count() > 0

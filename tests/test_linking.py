@@ -1,6 +1,7 @@
 """M4 gates: linking parity (Spark vs oracle, exact + LSH paths), CC
-property tests vs union-find, canonical-triple parity, and the end-to-end
-P/R >= 0.95 gate on CANONICAL triples."""
+property tests vs union-find, and canonical-triple parity against the
+oracle's per-mention join: both branches of the one Spark C4 rewrite, the
+production stage graph's P/R >= 0.95 gate included."""
 
 import random
 
@@ -13,6 +14,7 @@ from joint_entity_and_relation_extraction_spark.operators import canonicalize as
 from joint_entity_and_relation_extraction_spark.operators import extract as X
 from joint_entity_and_relation_extraction_spark.operators import linking as L
 from joint_entity_and_relation_extraction_spark.operators.webpages import web_pages
+from joint_entity_and_relation_extraction_spark.plans.pipeline import kg_stages
 from oracle import pipeline_local as oracle
 
 from conftest import SF0001
@@ -32,6 +34,15 @@ def spark_links(spark):
 @pytest.fixture(scope="module")
 def oracle_full():
     return oracle.run_full(SF0001)
+
+
+def _canon_rows(rows):
+    """Canonical triples as a sorted list over all 8 columns, typed alike
+    for Spark Rows and oracle tuples."""
+    return sorted((url, int(sent_id), int(subj), subj_norm, pred, int(obj),
+                   obj_norm, float(score))
+                  for url, sent_id, subj, subj_norm, pred, obj, obj_norm, score
+                  in rows)
 
 
 def test_alias_dict_matches_oracle(spark):
@@ -69,14 +80,17 @@ def test_link_parity_spark_vs_oracle(spark_links, oracle_full):
     assert "lsh" in methods or "none" in methods
 
 
-@pytest.mark.parametrize("force_distributed", [False, True])
-def test_cc_matches_union_find(spark, force_distributed):
+@pytest.mark.parametrize("distributed", [False, True])
+def test_cc_matches_union_find(spark, distributed):
+    """Both CC algorithms equal union-find: the driver path through
+    connected_components' size dispatch, and star contraction called
+    directly (the dispatch takes it only past DRIVER_CC_MAX_EDGES)."""
     rng = random.Random(7)
     edges = {(rng.randrange(200), rng.randrange(200)) for _ in range(150)}
     edges |= {(1000 + i, 1000 + i + 1) for i in range(25)}  # a 26-node chain
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    got = {(r.node, r.component) for r in C.connected_components(
-        df, force_distributed=force_distributed).collect()}
+    cc = C._star_contract(df) if distributed else C.connected_components(df)
+    got = {(r.node, r.component) for r in cc.collect()}
     want = oracle.connected_components(edges)
     assert got == set(want.items())
 
@@ -105,44 +119,48 @@ def test_star_contraction_logn_rounds_on_long_chain(spark):
     rng.shuffle(ids)
     edges = {(ids[i], ids[i + 1]) for i in range(len(ids) - 1)}
     df = spark.createDataFrame(sorted(edges), "src long, dst long")
-    got = {(r.node, r.component) for r in C.connected_components(
-        df, max_iter=12, force_distributed=True).collect()}
+    got = {(r.node, r.component) for r in C._star_contract(df, 12).collect()}
     want = oracle.connected_components(edges)
     assert got == set(want.items())
     assert len({c for _, c in got}) == 1  # one component, rooted at min id
 
 
-def test_surface_path_equals_mention_path(spark, spark_links):
-    """canonical_triples_by_surface (broadcast surface map, no mention
-    join) must equal the general mention-join path row-for-row."""
-    mentions, links, trip = spark_links
-    labels = C.connected_components(L.link_edges(links))
-    via_mentions = {tuple(r) for r in C.canonical_triples(
-        trip, C.assign_components(links, labels)).collect()}
+def test_surface_path_equals_mention_path(spark, spark_links, oracle_full):
+    """canonical_triples_by_surface without ``raw_surfaces`` (surfaces
+    taken from the triple stream itself, as the incremental tests build
+    it) equals the oracle's per-mention join on all 8 columns."""
+    mentions, _, trip = spark_links
     resolution = L.resolve_surfaces(
         mentions.select(L.normalize_col(F.col("surface")).alias("alias_norm"))
         .distinct(), L.alias_dict(spark, SF0001))
-    labels2 = C.connected_components(L.resolution_edges(resolution))
-    via_surfaces = {tuple(r) for r in C.canonical_triples_by_surface(
-        trip, C.surface_canon_map(resolution, labels2)).collect()}
-    assert via_surfaces == via_mentions and len(via_surfaces) > 100
+    labels = C.connected_components(L.resolution_edges(resolution))
+    got = _canon_rows(C.canonical_triples_by_surface(
+        trip, C.surface_canon_map(resolution, labels)).collect())
+    want = _canon_rows(oracle.canonicalize(
+        oracle_full["links"], oracle_full["triples_raw"]).itertuples(
+            index=False))
+    assert got == want and len(got) > 100
 
 
-def test_canonical_triples_pr_gate(spark, spark_links, oracle_full):
-    _, links, trip = spark_links
-    labels = C.connected_components(L.link_edges(links))
-    assigned = C.assign_components(links, labels)
-    canon = C.canonical_triples(trip, assigned)
-    got = {(r.url, r.sent_id, int(r.subj), r.pred, int(r.obj))
-           for r in canon.collect()}
-    want = {(r.url, r.sent_id, int(r.subj), r.pred, int(r.obj))
-            for r in oracle_full["canonical"].itertuples(index=False)}
-    tp = len(got & want)
-    precision = tp / max(len(got), 1)
-    recall = tp / max(len(want), 1)
+def test_canonical_triples_pr_gate(spark, oracle_full):
+    """The production canonical rows (kg_stages(...).canon, surfaces from
+    the distinct-sentence table) against the oracle: P = R = 1 on the
+    (url, sent_id, subj, pred, obj) identity, and equal on all 8 columns."""
+    g = kg_stages(spark, web_pages(spark, SF0001), L.alias_dict(spark, SF0001))
+    try:
+        got = _canon_rows(g.canon.collect())
+    finally:
+        for df in g.held:
+            df.unpersist()
+    want = _canon_rows(oracle_full["canonical"].itertuples(index=False))
+    got_keys, want_keys = ({r[:3] + r[4:6] for r in rows}
+                           for rows in (got, want))
+    tp = len(got_keys & want_keys)
+    precision = tp / max(len(got_keys), 1)
+    recall = tp / max(len(want_keys), 1)
     assert precision >= 0.95 and recall >= 0.95, (precision, recall)
     assert precision == 1.0 and recall == 1.0
-    assert len(got) > 100
+    assert got == want and len(got) > 100
 
 
 def test_surface_feats_batch_matches_per_row_reference():

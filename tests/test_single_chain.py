@@ -1,11 +1,11 @@
 """Guards: the KG chain is composed in one place, plans/pipeline.py's
 stage graph (kg_stages), and the MinHash candidate→verify step in one
 place, operators/dedup.py's band_candidates / jaccard_verified. Any other
-module that calls the linking or canonical-rewrite steps directly, builds
-a band equi-join or computes a shingle-set Jaccard is a new hand-written
-copy, with its own persist and checkpoint choices. perfbench/, tests/ and
-oracle/ are not scanned: reference implementations and tests compose the
-steps on purpose."""
+module that calls the linking, canonical-rewrite or G1 aggregate steps
+directly, builds a band equi-join or computes a shingle-set Jaccard is a
+new hand-written copy, with its own persist and checkpoint choices.
+perfbench/, tests/ and oracle/ are not scanned: reference implementations
+and tests compose the steps on purpose."""
 
 import ast
 import os
@@ -14,11 +14,17 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "joint_entity_and_relation_extraction_spark"
 
 #: guarded step → files allowed to call it. linking.link_mentions (the
-#: per-mention links operator) builds on resolve_surfaces in its own module.
+#: per-mention links operator) builds on resolve_surfaces in its own module;
+#: incremental.merge_triple_evidence builds its batch delta on
+#: aggregate_triples.
 ALLOWED = {
     "resolve_surfaces": {f"{PKG}/plans/pipeline.py",
                          f"{PKG}/operators/linking.py"},
+    "resolution_edges": {f"{PKG}/plans/pipeline.py"},
+    "surface_canon_map": {f"{PKG}/plans/pipeline.py"},
     "canonical_triples_by_surface": {f"{PKG}/plans/pipeline.py"},
+    "aggregate_triples": {f"{PKG}/plans/incremental.py",
+                          f"{PKG}/plans/pipeline.py"},
 }
 
 
@@ -56,8 +62,11 @@ def test_only_the_stage_graph_composes_the_chain():
         + "; ".join(offenders))
     # the scan sees the stage graph itself, so a miss is not vacuous
     assert {("resolve_surfaces", f"{PKG}/plans/pipeline.py"),
-            ("canonical_triples_by_surface",
-             f"{PKG}/plans/pipeline.py")} <= found
+            ("resolution_edges", f"{PKG}/plans/pipeline.py"),
+            ("surface_canon_map", f"{PKG}/plans/pipeline.py"),
+            ("canonical_triples_by_surface", f"{PKG}/plans/pipeline.py"),
+            ("aggregate_triples", f"{PKG}/plans/incremental.py"),
+            ("aggregate_triples", f"{PKG}/plans/pipeline.py")} <= found
 
 
 #: single-copy expression → the (file, enclosing function) allowed to
