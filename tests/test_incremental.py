@@ -1,6 +1,8 @@
 """Incremental merge gate: folding evidence in N batches equals the
 one-shot aggregation (monoid associativity), and merge only rewrites the
-touched predicate partitions."""
+touched predicate partitions — through merge_triple_evidence's partition
+overwrite and through IcebergLite's MERGE INTO (merge_upsert) on the same
+pred-partitioned, (subj, pred, obj)-keyed table."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -103,3 +105,53 @@ def test_merge_evaluates_its_batch_once(spark, canon_with_ts, tmp_path,
         merge(spark, root, part.filter(counted("url")))
         assert seen.value - before == part.count() > 0
 
+
+
+def _upsert_fold(spark, root, batch):
+    """Fold a batch into a triple table with ``il.merge_upsert``: matched
+    keys take the monoid-combined row, unmatched keys insert."""
+    delta = INC.aggregate_triples(batch).localCheckpoint(eager=True)
+    key = ["subj", "pred", "obj"]
+    if not il.exists(root):
+        il.append(delta, root, ["pred"])
+        return
+    preds = [r.pred for r in delta.select("pred").distinct().collect()]
+    existing = il.read(spark, root, where={"pred": preds})
+    touched = existing.join(delta.select(*key), key, "left_semi")
+    il.merge_upsert(spark, INC._combine(touched, delta), root, key)
+
+
+def test_merge_upsert_path_equals_one_shot(spark, canon_with_ts, tmp_path):
+    """A two-batch fold through merge_upsert reproduces the one-shot
+    aggregation exactly and commits a 'merge' snapshot (not an
+    overwrite)."""
+    root = str(tmp_path / "triples_m")
+    b1 = canon_with_ts.filter(F.crc32(F.col("url").cast("binary")) % 2 == 0)
+    b2 = canon_with_ts.filter(F.crc32(F.col("url").cast("binary")) % 2 == 1)
+    _upsert_fold(spark, root, b1)
+    _upsert_fold(spark, root, b2)
+    got = _key(il.read(spark, root))
+    want = _key(INC.aggregate_triples(canon_with_ts))
+    assert got == want and len(got) > 100
+    assert [s["operation"] for s in il.snapshots(root)] == [
+        "append", "merge"]
+
+
+def test_merge_upsert_rewrites_only_touched_partitions(
+        spark, canon_with_ts, tmp_path):
+    """The partition columns (pred) are a subset of the merge key, so
+    merge_upsert rewrites only the batch's predicate partitions and
+    carries every other unit into the new snapshot by reference."""
+    root = str(tmp_path / "triples_m2")
+    _upsert_fold(spark, root, canon_with_ts)
+    units_before = set(il.snapshots(root)[-1]["units"])
+    one_pred = canon_with_ts.filter(F.col("pred") == "KILL").limit(50)
+    _upsert_fold(spark, root, one_pred)
+    last = il.snapshots(root)[-1]
+    assert last["operation"] == "merge"
+    # rewritten units: only the touched predicate
+    assert all("pred=KILL" in u for u in last["added"])
+    # every OTHER partition's unit carried over by reference (no rewrite)
+    untouched_before = {u for u in units_before if "pred=KILL" not in u}
+    untouched_after = {u for u in last["units"] if "pred=KILL" not in u}
+    assert untouched_after == untouched_before and untouched_before
