@@ -77,9 +77,12 @@ def merge_triple_evidence(spark: SparkSession, table_root: str,
 
     Reads ONLY the partitions (preds) the batch touches (manifest-side
     pruning), combines, and dynamic-partition-overwrites those preds.
-    Returns the merged slice. At 10^12 scale the read+write is bounded by
-    the batch's predicate set, and the combine shuffles on (subj, pred,
-    obj) — the same key layout the table is bucketed by.
+    Returns the merged slice. The table is partitioned on ``pred`` alone
+    and laid out within a pred by ``pmod(hash(subj), 8)``
+    (:func:`triple_write_layout`), so a batch rewrites every pred it
+    touches in full; with the 5 relation labels a batch usually touches
+    them all and rewrites the whole table. The combine shuffles on
+    (subj, pred, obj), which no table layout matches.
     """
     delta = _materialized_delta(new_canon_with_ts)
     preds = [r.pred for r in delta.select("pred").distinct().collect()]

@@ -1249,8 +1249,7 @@ def q_window_scd2(spark, sf):
     the next change, open (is_current) on the last. Two windows over ONE
     (user_id | ts, event_id) partitioning — Catalyst plans a single
     exchange+sort; per-user partitions bound the window state at corpus
-    scale. The table-maintenance form (close-out + append on IcebergLite)
-    is scd2_upsert in sources/iceberglite.py."""
+    scale."""
     from pyspark.sql import Window
 
     e = read_table(spark, sf, "events")

@@ -364,8 +364,7 @@ TRAINING_QUERIES = {
     # privacy-grade curation: suppress rows whose quasi-identifier
     # combination is shared by < k documents
     "curation_k_anonymity": CU.k_anonymity_filter,
-    # SCD2 validity intervals from a change stream (table-maintenance
-    # form: iceberglite.scd2_upsert)
+    # SCD2 validity intervals from a change stream
     "window_scd2": QQ.q_window_scd2,
     # exact-k-per-stratum deterministic draw (salted md5 ranking)
     "sample_exact_k": CU.sample_exact_k,

@@ -335,12 +335,104 @@ def _collect_unit_blooms(root: str, units: list[str],
     return out
 
 
+class CommitConflict(RuntimeError):
+    """A concurrent writer committed between a rewrite's read and its
+    commit; the caller should retry against the new current snapshot."""
+
+
+def _carried_cols(manifest: dict, key: str, units: list[str]) -> set[str]:
+    """Columns with recorded ``key`` ("unit_stats" / "unit_blooms")
+    entries on any of ``units``."""
+    per_unit = manifest.get(key, {})
+    return {c for u in units for c in per_unit.get(u, {})}
+
+
+def _keep_all(unit: str) -> bool:
+    return True
+
+
+def _keep_none(unit: str) -> bool:
+    return False
+
+
+def _commit_snapshot(root: str, operation: str, added: list[str], *,
+                     keep=_keep_all, base: int | None = None,
+                     source: int | None = None, schema: str | None = None,
+                     partition_by: list[str] | None = None,
+                     tag: str | None = None,
+                     stats_cols: list[str] | None = None,
+                     bloom_cols: list[str] | None = None,
+                     staged: bool = False) -> int:
+    """The one commit path: every snapshot of every table is added here.
+
+    The new snapshot holds the units of ``source`` (default: the parent)
+    that ``keep`` accepts, then ``added``. A rewrite passes the snapshot
+    it read as ``base``; if another writer advanced the table since,
+    :class:`CommitConflict` is raised instead of silently dropping that
+    writer's rows (Iceberg's validate-at-commit rule for rewrites).
+    ``schema`` defaults to the one committed at ``source``.
+
+    Added units get per-unit [min, max] bounds for ``stats_cols`` and
+    bloom filters for ``bloom_cols``, plus every column the units they
+    replace (the ones ``keep`` rejects) carried: a rewrite keeps the
+    skipping its input had, and an append records what its caller asks
+    for. Both are read from the written files before the lock is taken.
+
+    Under :func:`_meta_lock` the manifest is reloaded, the id assigned,
+    the record appended and ``current_snapshot`` advanced — unless
+    ``staged`` (write-audit-publish: :func:`publish` advances it)."""
+    stats, blooms = {}, {}
+    if added:
+        m = _load(root)
+        replaced = [u for u in _units_at(
+            m, base if base is not None else m["current_snapshot"])
+            if not keep(u)]
+        s_cols = sorted(set(stats_cols or ())
+                        | _carried_cols(m, "unit_stats", replaced))
+        b_cols = sorted(set(bloom_cols or ())
+                        | _carried_cols(m, "unit_blooms", replaced))
+        if s_cols:
+            stats = _collect_unit_stats(root, added, s_cols)
+        if b_cols:
+            blooms = _collect_unit_blooms(root, added, b_cols)
+    with _meta_lock(root):
+        m = _load(root)
+        parent = m["current_snapshot"]
+        if base is not None and parent != base:
+            raise CommitConflict(
+                f"table advanced {base} -> {parent} during {operation}; "
+                "retry")
+        src = parent if source is None else source
+        snap = {
+            "id": _next_id(m), "parent": parent, "operation": operation,
+            "units": [u for u in _units_at(m, src) if keep(u)] + added,
+            "added": added, "tag": tag,
+            "schema": schema or _schema_at(m, src),
+            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
+        }
+        if staged:
+            snap["staged"] = True
+        else:
+            m["current_snapshot"] = snap["id"]
+            m["schema"] = snap["schema"]
+        m["snapshots"].append(snap)
+        if partition_by is not None:
+            m["partition_by"] = partition_by
+        if stats:
+            m.setdefault("unit_stats", {}).update(stats)
+        if blooms:
+            m.setdefault("unit_blooms", {}).update(blooms)
+        _commit(root, m)
+    return snap["id"]
+
+
 def append(df: DataFrame, root: str, partition_by: list[str] | None = None,
            tag: str | None = None,
            stats_cols: list[str] | None = None,
            bloom_cols: list[str] | None = None) -> int:
     """SNK1: append a snapshot; returns the new snapshot id.
 
+    ``partition_by`` None or ``[]`` keeps the table's layout.
     ``tag`` is an idempotency token recorded in the snapshot (e.g. a
     streaming micro-batch id); see :func:`committed_tags`.
     ``stats_cols`` records per-unit [min, max] bounds for those columns
@@ -350,30 +442,10 @@ def append(df: DataFrame, root: str, partition_by: list[str] | None = None,
     point lookups (where min/max bounds cannot prune)."""
     partition_by = partition_by or _load(root)["partition_by"]
     new_units = _write_snapshot(df, root, _new_token(), partition_by)
-    stats = (_collect_unit_stats(root, new_units, stats_cols)
-             if stats_cols else {})
-    blooms = (_collect_unit_blooms(root, new_units, bloom_cols)
-              if bloom_cols else {})
-    schema_json = df.schema.json()
-    with _meta_lock(root):
-        m = _load(root)
-        parent = m["current_snapshot"]
-        snap_id = _next_id(m)
-        m["partition_by"] = partition_by
-        m["schema"] = schema_json
-        if stats:
-            m.setdefault("unit_stats", {}).update(stats)
-        if blooms:
-            m.setdefault("unit_blooms", {}).update(blooms)
-        m["snapshots"].append({
-            "id": snap_id, "parent": parent, "operation": "append",
-            "units": _units_at(m, parent) + new_units, "added": new_units,
-            "tag": tag, "schema": schema_json,
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        m["current_snapshot"] = snap_id
-        _commit(root, m)
-    return snap_id
+    return _commit_snapshot(root, "append", new_units,
+                            schema=df.schema.json(),
+                            partition_by=partition_by, tag=tag,
+                            stats_cols=stats_cols, bloom_cols=bloom_cols)
 
 
 def overwrite_partitions(df: DataFrame, root: str,
@@ -384,25 +456,12 @@ def overwrite_partitions(df: DataFrame, root: str,
     re-runs of a stage therefore converge (checkpoint-resume, SURVEY.md §3.2)."""
     partition_by = partition_by or _load(root)["partition_by"]
     new_units = _write_snapshot(df, root, _new_token(), partition_by)
-    schema_json = df.schema.json()
     replaced = {tuple(sorted(_partition_values(u).items())) for u in new_units}
-    with _meta_lock(root):
-        m = _load(root)
-        parent = m["current_snapshot"]
-        snap_id = _next_id(m)
-        kept = [u for u in _units_at(m, parent)
-                if tuple(sorted(_partition_values(u).items())) not in replaced]
-        m["partition_by"] = partition_by
-        m["schema"] = schema_json
-        m["snapshots"].append({
-            "id": snap_id, "parent": parent, "operation": "overwrite",
-            "units": kept + new_units, "added": new_units,
-            "tag": tag, "schema": schema_json,
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        m["current_snapshot"] = snap_id
-        _commit(root, m)
-    return snap_id
+    return _commit_snapshot(
+        root, "overwrite", new_units, schema=df.schema.json(),
+        partition_by=partition_by, tag=tag,
+        keep=lambda u: tuple(sorted(_partition_values(u).items()))
+        not in replaced)
 
 
 def committed_tags(root: str) -> set[str]:
@@ -637,9 +696,6 @@ def drop_partitions(root: str, where: dict[str, object]) -> int:
     """Metadata-only partition delete (Iceberg ``DELETE WHERE`` on partition
     predicates): commits a snapshot whose unit list excludes matching
     partitions. Data files stay on disk (time travel still sees them)."""
-    m = _load(root)
-    parent = m["current_snapshot"]
-
     def match(u: str) -> bool:
         pv = _partition_values(u)
         for k, v in where.items():
@@ -649,43 +705,8 @@ def drop_partitions(root: str, where: dict[str, object]) -> int:
             return False
         return True
 
-    kept = [u for u in _units_at(m, parent) if not match(u)]
-    snap_id = _next_id(m)
-    m["snapshots"].append({
-        "id": snap_id, "parent": parent, "operation": "delete",
-        "units": kept, "added": [], "schema": _schema_at(m, parent),
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-    })
-    m["current_snapshot"] = snap_id
-    _commit(root, m)
-    return snap_id
-
-
-class CommitConflict(RuntimeError):
-    """A concurrent writer committed between a maintenance read and its
-    commit; the caller should retry against the new current snapshot."""
-
-
-def _stats_cols_of(manifest: dict) -> list[str]:
-    """Columns with recorded per-unit bounds anywhere in the manifest —
-    the stats contract a rewrite (compact / merge) must carry forward:
-    without re-deriving them for the rewritten units, where_range data
-    skipping silently degrades to a full scan after any maintenance op
-    (ADVICE r04)."""
-    cols: set[str] = set()
-    for st in manifest.get("unit_stats", {}).values():
-        cols.update(st)
-    return sorted(cols)
-
-
-def _bloom_cols_of(manifest: dict) -> list[str]:
-    """Same carry-forward contract as :func:`_stats_cols_of`, for the
-    per-unit bloom filters: a rewrite re-derives blooms for its new units
-    so where_point skipping survives maintenance."""
-    cols: set[str] = set()
-    for bl in manifest.get("unit_blooms", {}).values():
-        cols.update(bl)
-    return sorted(cols)
+    return _commit_snapshot(root, "delete", [],
+                            keep=lambda u: not match(u))
 
 
 def compact(spark: SparkSession, root: str) -> int:
@@ -717,30 +738,8 @@ def compact(spark: SparkSession, root: str) -> int:
     else:
         df = df.coalesce(1)
     new_units = _write_snapshot(df, root, _new_token(), partition_by)
-    stats = (_collect_unit_stats(root, new_units, _stats_cols_of(m))
-             if _stats_cols_of(m) else {})
-    blooms = (_collect_unit_blooms(root, new_units, _bloom_cols_of(m))
-              if _bloom_cols_of(m) else {})
-    with _meta_lock(root):
-        m = _load(root)
-        if m["current_snapshot"] != base:
-            raise CommitConflict(
-                f"table advanced {base} -> {m['current_snapshot']} during "
-                f"compaction; retry")
-        snap_id = _next_id(m)
-        if stats:
-            m.setdefault("unit_stats", {}).update(stats)
-        if blooms:
-            m.setdefault("unit_blooms", {}).update(blooms)
-        m["snapshots"].append({
-            "id": snap_id, "parent": base, "operation": "compact",
-            "units": new_units, "added": new_units, "tag": None,
-            "schema": _schema_at(m, base),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        m["current_snapshot"] = snap_id
-        _commit(root, m)
-    return snap_id
+    return _commit_snapshot(root, "compact", new_units, base=base,
+                            keep=_keep_none)
 
 
 _ZORDER_BITS = 16
@@ -802,8 +801,9 @@ def cluster_by(spark: SparkSession, root: str, sort_cols: list[str],
     assigns contiguous, sorted, disjoint key ranges to partition ids);
     the committed manifest schema is unchanged, and :func:`read`
     projects every scan to it, so the synthetic component never appears
-    in query results. ``stats_cols`` defaults to ``sort_cols`` plus any
-    columns already carrying unit stats. Unpartitioned tables only (a
+    in query results. Unit stats are recorded for ``sort_cols`` and
+    ``stats_cols`` (plus what the rewritten units carried, like every
+    rewrite: :func:`_commit_snapshot`). Unpartitioned tables only (a
     partitioned table's clustering unit is the partition — compact does
     that); same validate-at-commit conflict rule as :func:`compact`.
 
@@ -824,8 +824,6 @@ def cluster_by(spark: SparkSession, root: str, sort_cols: list[str],
         raise ValueError("cluster_by supports unpartitioned tables; "
                          "partitioned tables cluster per-partition via "
                          "compact()")
-    want_stats = sorted(set(sort_cols) | set(stats_cols or [])
-                        | set(_stats_cols_of(m)))
     df = read(spark, root, snapshot=base)
     if zorder and len(sort_cols) >= 2:
         zdf = df.withColumn("_zv", _zvalue_expr(spark, df, sort_cols))
@@ -839,29 +837,9 @@ def cluster_by(spark: SparkSession, root: str, sort_cols: list[str],
                .withColumn("_cluster_bucket", F.spark_partition_id()))
     new_units = _write_snapshot(rdf, root, _new_token(),
                                 ["_cluster_bucket"])
-    stats = _collect_unit_stats(root, new_units, want_stats)
-    blooms = (_collect_unit_blooms(root, new_units, _bloom_cols_of(m))
-              if _bloom_cols_of(m) else {})
-    with _meta_lock(root):
-        m = _load(root)
-        if m["current_snapshot"] != base:
-            raise CommitConflict(
-                f"table advanced {base} -> {m['current_snapshot']} during "
-                f"cluster_by; retry")
-        snap_id = _next_id(m)
-        if stats:
-            m.setdefault("unit_stats", {}).update(stats)
-        if blooms:
-            m.setdefault("unit_blooms", {}).update(blooms)
-        m["snapshots"].append({
-            "id": snap_id, "parent": base, "operation": "cluster",
-            "units": new_units, "added": new_units, "tag": None,
-            "schema": _schema_at(m, base),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        m["current_snapshot"] = snap_id
-        _commit(root, m)
-    return snap_id
+    return _commit_snapshot(root, "cluster", new_units, base=base,
+                            keep=_keep_none,
+                            stats_cols=list(sort_cols) + list(stats_cols or []))
 
 
 def merge_upsert(spark: SparkSession, updates: DataFrame, root: str,
@@ -885,10 +863,10 @@ def merge_upsert(spark: SparkSession, updates: DataFrame, root: str,
 
     ``updates`` must be key-unique (enforced: ambiguous merges raise).
 
-    The columns already carrying unit_stats in the manifest get their
-    per-unit [min, max] bounds re-derived for the rewritten units, so
-    where_range data skipping survives a merge instead of silently
-    degrading to a full scan (ADVICE r04).
+    The rewritten units get the stats and blooms the units they replace
+    carried (:func:`_commit_snapshot`), so where_range / where_point
+    skipping survives a merge instead of silently degrading to a full
+    scan (ADVICE r04).
     """
     from pyspark.sql import functions as F
 
@@ -904,29 +882,26 @@ def merge_upsert(spark: SparkSession, updates: DataFrame, root: str,
             f"updates carry duplicate keys on {key_cols}: MERGE would be "
             "ambiguous (real Iceberg raises the same cardinality error)")
     partition_scoped = bool(partition_by) and set(partition_by) <= set(key_cols)
-    kept_units: list[str] = []
+    touched = _keep_all  # a table-wide rewrite replaces every unit
     if partition_scoped:
         # matched rows can only live in partitions the updates touch —
         # read just those (manifest pruning), carry every other unit over
-        touched = updates.select(*partition_by).distinct().collect()
+        rows = updates.select(*partition_by).distinct().collect()
         # RAW values go to read() (it path-encodes internally); the
         # kept-unit scoping below compares against the SAME encoding, so
         # the pruned read and the carried-over set can never disagree on
         # a value's path spelling (ADVICE r05: str() vs hive escaping /
         # __HIVE_DEFAULT_PARTITION__ left a matched row in both)
-        where = {c: sorted({r[c] for r in touched},
-                           key=_hive_escape_value)
+        where = {c: sorted({r[c] for r in rows}, key=_hive_escape_value)
                  for c in partition_by}
         cur = read(spark, root, snapshot=base, where=where)
-        m_base = _load(root)
         enc = {c: {_hive_escape_value(v) for v in where[c]}
                for c in partition_by}
 
-        def _touched(u: str) -> bool:
+        def touched(u: str) -> bool:
             pv = _partition_values(u)
             return all(pv.get(c) in enc[c] for c in partition_by
                        if c in pv)
-        kept_units = [u for u in _units_at(m_base, base) if not _touched(u)]
     else:
         cur = read(spark, root, snapshot=base)
     updates = updates.select(*cur.columns)  # align column order to table
@@ -944,30 +919,8 @@ def merge_upsert(spark: SparkSession, updates: DataFrame, root: str,
     if partition_by:
         merged = merged.repartition(*[F.col(c) for c in partition_by])
     new_units = _write_snapshot(merged, root, _new_token(), partition_by)
-    stats = (_collect_unit_stats(root, new_units, _stats_cols_of(m))
-             if _stats_cols_of(m) else {})
-    blooms = (_collect_unit_blooms(root, new_units, _bloom_cols_of(m))
-              if _bloom_cols_of(m) else {})
-    with _meta_lock(root):
-        m = _load(root)
-        if m["current_snapshot"] != base:
-            raise CommitConflict(
-                f"table advanced {base} -> {m['current_snapshot']} during "
-                f"merge; retry")
-        snap_id = _next_id(m)
-        if stats:
-            m.setdefault("unit_stats", {}).update(stats)
-        if blooms:
-            m.setdefault("unit_blooms", {}).update(blooms)
-        m["snapshots"].append({
-            "id": snap_id, "parent": base, "operation": "merge",
-            "units": kept_units + new_units, "added": new_units, "tag": None,
-            "schema": _schema_at(m, base),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        m["current_snapshot"] = snap_id
-        _commit(root, m)
-    return snap_id
+    return _commit_snapshot(root, "merge", new_units, base=base,
+                            keep=lambda u: not touched(u))
 
 
 def expire_snapshots(root: str, keep_last: int = 1,
@@ -1046,8 +999,8 @@ def exists(root: str) -> bool:
 def is_empty(root: str) -> bool:
     """Manifest-only emptiness probe: True when the current snapshot
     holds no units (e.g. after drop_partitions removed everything).
-    Raises KeyError/ValueError semantics of _load for a missing table —
-    probe with :func:`exists` first."""
+    A table that was never written has no units either, so it is empty
+    too; :func:`exists` tells the two apart."""
     m = _load(root)
     return not _units_at(m, m["current_snapshot"])
 
@@ -1142,90 +1095,7 @@ def rollback_to(root: str, snapshot: int) -> int:
     metadata lock like any other commit. read_incremental refuses to
     cross a rollback (rows were logically removed — append-only
     semantics cannot represent it)."""
-    with _meta_lock(root):
-        m = _load(root)
-        ids = {s["id"] for s in m["snapshots"]}
-        if snapshot not in ids:
-            raise ValueError(f"unknown snapshot {snapshot} (have {sorted(ids)})")
-        parent = m["current_snapshot"]
-        snap_id = _next_id(m)
-        m["snapshots"].append({
-            "id": snap_id, "parent": parent, "operation": "rollback",
-            "units": _units_at(m, snapshot), "added": [], "tag": None,
-            "schema": _schema_at(m, snapshot),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        m["current_snapshot"] = snap_id
-        _commit(root, m)
-    return snap_id
-
-
-def scd2_upsert(spark: SparkSession, updates: DataFrame, root: str,
-                key_cols: list[str], ts_col: str,
-                partition_by: list[str] | None = None) -> int:
-    """Type-2 slowly-changing-dimension maintenance: the table's rows are
-    validity intervals — key columns + attribute columns +
-    ``effective_from`` / ``effective_to`` (NULL = current). ``updates``
-    carries new attribute versions stamped with ``ts_col``; each update
-    row IS a new version (callers collapse no-op states first — the
-    query-side form, plans.queries.q_window_scd2, shows the collapse).
-
-    Per batch: within a key, updates ordered by ``ts_col`` chain into
-    intervals (each closed by the next); the key's existing CURRENT row
-    is closed at the batch's first timestamp. Keys the batch does not
-    touch pass through byte-identical.
-
-    Commits a single ``scd2`` snapshot with compact-style conflict
-    detection (validate-at-commit against the read base). This first cut
-    rewrites the table; at deployment scale the rewrite is scoped to the
-    touched partitions exactly like merge_upsert — same mechanics, kept
-    simple here because the witness tables are dimension-sized."""
-    from pyspark.sql import Window
-
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy(*key_cols).orderBy(ts_col)
-    new_vers = (updates
-                .withColumn("effective_from", F.col(ts_col))
-                .withColumn("effective_to", F.lead(ts_col).over(w))
-                .drop(ts_col))
-    if not exists(root):
-        return append(new_vers, root, partition_by or [])
-    m = _load(root)
-    base = m["current_snapshot"]
-    cur = read(spark, root)
-    first_ts = (updates.groupBy(*key_cols)
-                .agg(F.min(ts_col).alias("_batch_from")))
-    joined = cur.join(F.broadcast(first_ts), key_cols, "left")
-    closed_or_kept = (
-        joined.withColumn(
-            "effective_to",
-            F.when(F.col("effective_to").isNull()
-                   & F.col("_batch_from").isNotNull(),
-                   F.col("_batch_from"))
-            .otherwise(F.col("effective_to")))
-        .drop("_batch_from"))
-    out = closed_or_kept.unionByName(new_vers)
-    part = partition_by or m["partition_by"]
-    if part:
-        out = out.repartition(*[F.col(c) for c in part])
-    new_units = _write_snapshot(out, root, _new_token(), part)
-    with _meta_lock(root):
-        m = _load(root)
-        if m["current_snapshot"] != base:
-            raise CommitConflict(
-                f"table advanced {base} -> {m['current_snapshot']} during "
-                f"scd2_upsert; retry")
-        snap_id = _next_id(m)
-        m["snapshots"].append({
-            "id": snap_id, "parent": base, "operation": "scd2",
-            "units": new_units, "added": new_units, "tag": None,
-            "schema": out.schema.json(),
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        m["current_snapshot"] = snap_id
-        _commit(root, m)
-    return snap_id
+    return _commit_snapshot(root, "rollback", [], source=snapshot)
 
 
 def stage_append(df: DataFrame, root: str,
@@ -1240,32 +1110,13 @@ def stage_append(df: DataFrame, root: str,
     atomic, so a failed audit simply never publishes (the staged files
     are reclaimed by expire_snapshots' orphan sweep once truncated).
     """
-    partition_by = partition_by if partition_by is not None \
-        else _load(root)["partition_by"]
+    partition_by = partition_by or _load(root)["partition_by"]
     new_units = _write_snapshot(df, root, _new_token(), partition_by)
-    stats = (_collect_unit_stats(root, new_units, stats_cols)
-             if stats_cols else {})
-    blooms = (_collect_unit_blooms(root, new_units, bloom_cols)
-              if bloom_cols else {})
-    schema_json = df.schema.json()
-    with _meta_lock(root):
-        m = _load(root)
-        parent = m["current_snapshot"]
-        snap_id = _next_id(m)
-        m["partition_by"] = partition_by
-        if stats:
-            m.setdefault("unit_stats", {}).update(stats)
-        if blooms:
-            m.setdefault("unit_blooms", {}).update(blooms)
-        m["snapshots"].append({
-            "id": snap_id, "parent": parent, "operation": "append",
-            "units": _units_at(m, parent) + new_units, "added": new_units,
-            "tag": None, "schema": schema_json, "staged": True,
-            "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
-        })
-        # current_snapshot intentionally NOT advanced
-        _commit(root, m)
-    return snap_id
+    return _commit_snapshot(root, "append", new_units,
+                            schema=df.schema.json(),
+                            partition_by=partition_by,
+                            stats_cols=stats_cols, bloom_cols=bloom_cols,
+                            staged=True)
 
 
 def publish(root: str, snapshot: int) -> int:

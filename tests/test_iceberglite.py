@@ -36,6 +36,48 @@ def test_overwrite_partitions_keeps_untouched(spark, tbl):
     assert got == {("a", 99), ("b", 2)}
 
 
+def test_overwrite_partitions_keeps_range_skipping(spark, tbl):
+    """The unit an overwrite writes gets the [min, max] bounds the unit it
+    replaces carried, so a where_range read still skips it, with exact
+    rows."""
+    il.append(_df(spark, [("a", 1), ("a", 9), ("b", 100), ("b", 190)]),
+              tbl, ["k"], stats_cols=["v"])
+    il.overwrite_partitions(_df(spark, [("a", 5), ("a", 50)]), tbl, ["k"])
+    m = il._load(tbl)
+    (unit,) = m["snapshots"][-1]["added"]
+    assert m["unit_stats"][unit]["v"] == [5, 50]
+    full = il.read(spark, tbl)
+    for lo, hi, want in ((100, 200, [100, 190]), (0, 60, [5, 50])):
+        pruned = il.read(spark, tbl, where_range={"v": (lo, hi)})
+        other = "k=a" if lo == 100 else "k=b"
+        assert pruned.inputFiles() and all(
+            other not in f for f in pruned.inputFiles())
+        rows = pruned.filter(F.col("v").between(lo, hi))
+        assert sorted(r.v for r in rows.collect()) == want == sorted(
+            r.v for r in full.filter(F.col("v").between(lo, hi)).collect())
+
+
+def test_drop_partitions_waits_for_the_metadata_lock(spark, tbl):
+    """drop_partitions commits under the metadata lock: while another
+    holder has it, no snapshot is committed (a lock-free commit can drop
+    the holder's snapshot); once it is released, the drop lands."""
+    import threading
+
+    il.append(_df(spark, [("a", 1), ("b", 2)]), tbl, ["k"])
+    base = il.current_snapshot(tbl)
+    done = []
+    with il._meta_lock(tbl):
+        t = threading.Thread(
+            target=lambda: done.append(il.drop_partitions(tbl, {"k": "a"})))
+        t.start()
+        t.join(0.5)
+        assert t.is_alive() and not done
+        assert il.current_snapshot(tbl) == base
+    t.join(30)
+    assert done and il.current_snapshot(tbl) == done[0] != base
+    assert {r.k for r in il.read(spark, tbl).collect()} == {"b"}
+
+
 def test_manifest_side_pruning_lists_only_matching(spark, tbl):
     il.append(_df(spark, [("a", 1), ("b", 2), ("c", 3)]), tbl, ["k"])
     df = il.read(spark, tbl, where={"k": "b"})
@@ -279,6 +321,32 @@ def test_compact_conflict_detection(spark, tbl):
         il._write_snapshot = real_write
     # racer's row survived; table still consistent
     assert il.read(spark, tbl).count() == 2
+
+
+def test_cluster_by_conflict_detection(spark, tbl, monkeypatch):
+    """An append landing between cluster_by's write and its commit must
+    raise CommitConflict, never drop the racer's rows; a retry on the new
+    current snapshot clusters both."""
+    il.append(_df(spark, [("a", 1)]), tbl, [])
+    real_write = il._write_snapshot
+    raced = []
+
+    def racing_write(df, root, token, partition_by):
+        units = real_write(df, root, token, partition_by)
+        if not raced:
+            raced.append(1)
+            il.append(_df(spark, [("b", 2)]), tbl, [])
+        return units
+
+    monkeypatch.setattr(il, "_write_snapshot", racing_write)
+    with pytest.raises(il.CommitConflict):
+        il.cluster_by(spark, tbl, ["v"], n_units=2)
+    assert sorted(map(tuple, il.read(spark, tbl).collect())) \
+        == [("a", 1), ("b", 2)]
+    il.cluster_by(spark, tbl, ["v"], n_units=2)
+    assert il.snapshots(tbl)[-1]["operation"] == "cluster"
+    assert sorted(map(tuple, il.read(spark, tbl).collect())) \
+        == [("a", 1), ("b", 2)]
 
 
 def test_expire_snapshots_reclaims_unreferenced_dirs(spark, tbl):
@@ -739,40 +807,6 @@ def test_rollback_to_restores_state_and_keeps_history(spark, tbl):
     il.append(_df(spark, [("c", 3)]), tbl, ["k"])
     assert {r.k for r in il.read(spark, tbl).select("k").collect()} \
         == {"a", "c"}
-
-
-def test_scd2_upsert_matches_model(spark, tbl):
-    """SCD2 maintenance (r06): two update batches against a pure-python
-    interval model — per key the version chain is contiguous (each
-    effective_to equals the next effective_from), exactly one current
-    row per key, untouched keys pass through, and history stays
-    time-travelable."""
-    def upd(rows):
-        return spark.createDataFrame(rows, "k string, attr string, ts int")
-
-    s1 = il.scd2_upsert(spark, upd([("a", "x", 10), ("a", "y", 20),
-                                    ("b", "p", 15)]),
-                        tbl, ["k"], "ts")
-    il.scd2_upsert(spark, upd([("a", "z", 30), ("c", "q", 5)]),
-                   tbl, ["k"], "ts")
-
-    rows = il.read(spark, tbl).collect()
-    model = {
-        ("a", "x", 10, 20), ("a", "y", 20, 30), ("a", "z", 30, None),
-        ("b", "p", 15, None), ("c", "q", 5, None),
-    }
-    got = {(r.k, r.attr, r.effective_from, r.effective_to) for r in rows}
-    assert got == model
-    current = [r for r in rows if r.effective_to is None]
-    assert sorted(r.k for r in current) == ["a", "b", "c"]
-    # history: the pre-batch-2 snapshot still shows a/y current
-    old = {(r.k, r.attr, r.effective_to)
-           for r in il.read(spark, tbl, snapshot=s1).collect()}
-    assert ("a", "y", None) in old and not any(
-        k == "c" for k, _, _ in old)
-    # an scd2 snapshot modifies rows — incremental append scan refuses
-    with pytest.raises(ValueError, match="scd2"):
-        il.read_incremental(spark, tbl, from_snapshot=s1)
 
 
 def test_wap_stage_audit_publish(spark, tbl):

@@ -4,6 +4,9 @@ place, operators/dedup.py's band_candidates / jaccard_verified. Any other
 module that calls the linking, canonical-rewrite or G1 aggregate steps
 directly, builds a band equi-join or computes a shingle-set Jaccard is a
 new hand-written copy, with its own persist and checkpoint choices.
+IcebergLite snapshots are committed in one place too,
+sources/iceberglite._commit_snapshot: a writer that takes the metadata
+lock or swaps the manifest itself is a hand-written commit protocol.
 perfbench/, tests/ and oracle/ are not scanned: reference implementations
 and tests compose the steps on purpose."""
 
@@ -119,3 +122,54 @@ def test_minhash_candidate_verify_has_one_copy():
     # every allowed site is seen, so a renamed helper is not a vacuous pass
     assert {(k, rel, fn) for k, sites in SINGLE_COPY.items()
             for rel, fn in sites} <= found
+
+
+#: the functions of sources/iceberglite.py allowed to take the metadata
+#: lock or swap the manifest: _commit_snapshot adds every snapshot;
+#: publish and expire_snapshots add none (they move the pointer or drop
+#: history)
+COMMIT_SITES = {"_commit_snapshot", "publish", "expire_snapshots"}
+
+
+def _commit_calls(path):
+    """(enclosing function, what, line) of every ``with _meta_lock(...)``
+    and ``_commit(...)`` in a file."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+
+    def name(call):
+        fn = call.func
+        return fn.attr if isinstance(fn, ast.Attribute) else getattr(
+            fn, "id", None)
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from visit(child, child.name)
+                continue
+            if isinstance(child, ast.With):
+                for item in child.items:
+                    e = item.context_expr
+                    if isinstance(e, ast.Call) and name(e) == "_meta_lock":
+                        yield fn, "_meta_lock", child.lineno
+            if isinstance(child, ast.Call) and name(child) == "_commit":
+                yield fn, "_commit", child.lineno
+            yield from visit(child, fn)
+
+    yield from visit(tree, None)
+
+
+def test_iceberglite_commits_through_one_function():
+    found, offenders = set(), []
+    for path in _scanned_files():
+        rel = os.path.relpath(path, ROOT)
+        for fn, what, line in _commit_calls(path):
+            found.add((fn, what))
+            if fn not in COMMIT_SITES:
+                offenders.append(f"{rel}:{line} ({fn}) calls {what}")
+    assert not offenders, (
+        "commit IcebergLite snapshots through iceberglite._commit_snapshot "
+        "instead: " + "; ".join(offenders))
+    # the scan sees the commit function itself, so a miss is not vacuous
+    assert {(fn, what) for fn in COMMIT_SITES
+            for what in ("_meta_lock", "_commit")} <= found
