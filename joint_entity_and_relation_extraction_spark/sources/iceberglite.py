@@ -384,9 +384,8 @@ def _commit_snapshot(root: str, operation: str, added: list[str], *,
     stats, blooms = {}, {}
     if added:
         m = _load(root)
-        replaced = [u for u in _units_at(
-            m, base if base is not None else m["current_snapshot"])
-            if not keep(u)]
+        replaced = [u for u in _units_at(m, m["current_snapshot"])
+                    if not keep(u)]
         s_cols = sorted(set(stats_cols or ())
                         | _carried_cols(m, "unit_stats", replaced))
         b_cols = sorted(set(bloom_cols or ())

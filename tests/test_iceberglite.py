@@ -74,7 +74,7 @@ def test_drop_partitions_waits_for_the_metadata_lock(spark, tbl):
         assert t.is_alive() and not done
         assert il.current_snapshot(tbl) == base
     t.join(30)
-    assert done and il.current_snapshot(tbl) == done[0] != base
+    assert not t.is_alive() and il.current_snapshot(tbl) == done[0] != base
     assert {r.k for r in il.read(spark, tbl).collect()} == {"b"}
 
 

@@ -83,8 +83,8 @@ SINGLE_COPY = {
 }
 
 
-def _single_copy_sites(path):
-    """(key, enclosing function, line) of every call in SINGLE_COPY."""
+def _single_copy_sites(path, table=SINGLE_COPY):
+    """(key, enclosing function, line) of every call in ``table``."""
     with open(path) as f:
         tree = ast.parse(f.read(), path)
 
@@ -100,7 +100,7 @@ def _single_copy_sites(path):
                 arg = (child.args[0].value if child.args
                        and isinstance(child.args[0], ast.Constant) else None)
                 for key in ((name, arg), (name, None)):
-                    if key in SINGLE_COPY:
+                    if key in table:
                         yield key, fn, child.lineno
             yield from visit(child, fn)
 
@@ -124,52 +124,28 @@ def test_minhash_candidate_verify_has_one_copy():
             for rel, fn in sites} <= found
 
 
-#: the functions of sources/iceberglite.py allowed to take the metadata
-#: lock or swap the manifest: _commit_snapshot adds every snapshot;
-#: publish and expire_snapshots add none (they move the pointer or drop
-#: history)
-COMMIT_SITES = {"_commit_snapshot", "publish", "expire_snapshots"}
-
-
-def _commit_calls(path):
-    """(enclosing function, what, line) of every ``with _meta_lock(...)``
-    and ``_commit(...)`` in a file."""
-    with open(path) as f:
-        tree = ast.parse(f.read(), path)
-
-    def name(call):
-        fn = call.func
-        return fn.attr if isinstance(fn, ast.Attribute) else getattr(
-            fn, "id", None)
-
-    def visit(node, fn):
-        for child in ast.iter_child_nodes(node):
-            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                yield from visit(child, child.name)
-                continue
-            if isinstance(child, ast.With):
-                for item in child.items:
-                    e = item.context_expr
-                    if isinstance(e, ast.Call) and name(e) == "_meta_lock":
-                        yield fn, "_meta_lock", child.lineno
-            if isinstance(child, ast.Call) and name(child) == "_commit":
-                yield fn, "_commit", child.lineno
-            yield from visit(child, fn)
-
-    yield from visit(tree, None)
+#: the functions allowed to take IcebergLite's metadata lock or swap its
+#: manifest: _commit_snapshot adds every snapshot; publish and
+#: expire_snapshots add none (they move the pointer or drop history)
+_ICEBERG = f"{PKG}/sources/iceberglite.py"
+ONE_COMMIT = {
+    (call, None): {(_ICEBERG, fn) for fn in (
+        "_commit_snapshot", "publish", "expire_snapshots")}
+    for call in ("_meta_lock", "_commit")
+}
 
 
 def test_iceberglite_commits_through_one_function():
     found, offenders = set(), []
     for path in _scanned_files():
         rel = os.path.relpath(path, ROOT)
-        for fn, what, line in _commit_calls(path):
-            found.add((fn, what))
-            if fn not in COMMIT_SITES:
-                offenders.append(f"{rel}:{line} ({fn}) calls {what}")
+        for key, fn, line in _single_copy_sites(path, ONE_COMMIT):
+            found.add((key, rel, fn))
+            if (rel, fn) not in ONE_COMMIT[key]:
+                offenders.append(f"{rel}:{line} ({fn}) calls {key[0]}")
     assert not offenders, (
         "commit IcebergLite snapshots through iceberglite._commit_snapshot "
         "instead: " + "; ".join(offenders))
     # the scan sees the commit function itself, so a miss is not vacuous
-    assert {(fn, what) for fn in COMMIT_SITES
-            for what in ("_meta_lock", "_commit")} <= found
+    assert {(k, rel, fn) for k, sites in ONE_COMMIT.items()
+            for rel, fn in sites} <= found
