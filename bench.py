@@ -183,7 +183,12 @@ def _warmup(spark) -> None:
     wp = web_pages(spark, SF_DIR, num_partitions=2 * cores).filter(
         F.length("url") % 10 < 2)  # ~20% sample, still spans all partitions
     sents = X.split_sentences(X.lang_filter(X.extract_text(wp)))
-    X.infer(sents.filter(F.col("sent_id") < 1), num_partitions=2 * cores).count()
+    first = sents.filter(F.col("sent_id") < 1)
+    X.infer(first, num_partitions=2 * cores).count()
+    # the distinct-sentence model stage takes as many partitions as its
+    # rows fill 128-row chunks (a few here); the per-sentence stage spans
+    # all 2 * cores, so it builds the model weights in every worker
+    X.infer(first, num_partitions=2 * cores, dedup=False).count()
     # also import the dedup module + allocate its signature pool in every
     # worker: the signature stages run at cluster width (read_docs), so a
     # cold first-touch otherwise lands inside the first timed dedup query

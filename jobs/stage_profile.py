@@ -15,7 +15,10 @@ work is charged to the layer that runs it (on kg_recrawl_merge, mostly
 stops the event log is parsed and, per job group, one line is printed
 per completed stage: tasks, the largest task's run time in ms, the
 stage's executor CPU ms, and the shuffle records it read and wrote.
-Skipped stages (shuffle output reused) print nothing.
+Skipped stages (shuffle output reused) print nothing. Then one line per
+job of the profiled run, in submission order: its group, its wall in ms
+and the gap in ms since the jobs before it had all ended. The gaps are
+time no job ran, mostly query planning between actions.
 
 A stage whose largest task is close to its whole CPU time is serial or
 skewed; a stage whose records written dwarf its input is an expansion
@@ -32,6 +35,7 @@ import json
 import os
 import shutil
 import sys
+import time
 from collections import defaultdict
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -111,6 +115,44 @@ def read_stages(log_dir: str) -> dict[str, list[dict]]:
     return out
 
 
+def read_jobs(log_dir: str, since_ms: int) -> list[dict]:
+    """Jobs submitted at or after ``since_ms`` (epoch ms), in submission
+    order, each with its group, wall_ms and gap_ms: the time from the end
+    of every earlier-submitted job (or from ``since_ms``) to its start,
+    0 while an earlier job still runs."""
+    jobs: dict[int, dict] = {}
+    for path in _log_files(log_dir):
+        with open(path) as f:
+            for line in f:
+                ev = json.loads(line)
+                kind = ev.get("Event")
+                if kind == "SparkListenerJobStart":
+                    jobs[ev["Job ID"]] = {
+                        "job": ev["Job ID"], "start": ev["Submission Time"],
+                        "end": None,
+                        "group": (ev.get("Properties") or {}).get(
+                            "spark.jobGroup.id", BETWEEN)}
+                elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
+                    jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
+    out, last_end = [], since_ms
+    for j in sorted(jobs.values(), key=lambda j: (j["start"], j["job"])):
+        if j["start"] < since_ms or j["end"] is None:
+            continue
+        out.append({"job": j["job"], "group": j["group"],
+                    "wall_ms": j["end"] - j["start"],
+                    "gap_ms": max(0, j["start"] - last_end)})
+        last_end = max(last_end, j["end"])
+    return out
+
+
+def print_jobs(jobs: list[dict]) -> None:
+    print(f"== jobs: {len(jobs)}, {sum(j['wall_ms'] for j in jobs)} ms in "
+          f"jobs, {sum(j['gap_ms'] for j in jobs)} ms in gaps")
+    print(f"{'job':>6} {'wall_ms':>8} {'gap_ms':>7}  group")
+    for j in jobs:
+        print(f"{j['job']:>6} {j['wall_ms']:>8} {j['gap_ms']:>7}  {j['group']}")
+
+
 def print_profile(by_group: dict[str, list[dict]], groups: list[str]) -> None:
     head = (f"{'stage':>6} {'tasks':>6} {'max_task_ms':>12} {'cpu_ms':>9} "
             f"{'shuffle_read':>13} {'shuffle_written':>16}  name")
@@ -158,21 +200,24 @@ def main() -> None:
                           extra_conf=conf)
     spark.sparkContext.setLogLevel("ERROR")
     tr = JobGroups(spark.sparkContext)
-    cold = 0
+    cold, since_ms = 0, 0
     try:
         if a.workload:
             wl.start(spark)
             wl.run_unit(spark, tr, 0)  # cold unit, not printed
             cold = len(tr.groups)
+            since_ms = int(time.time() * 1000)
             wl.run_unit(spark, tr, 1)
         else:
             queries = {**registry.PENDING_QUERIES, **registry.all_queries()}
             fn = queries[a.query]
             fn(spark, a.sf_dir).collect()  # cold run, not printed
+            since_ms = int(time.time() * 1000)
             tr.layer(a.query, lambda: fn(spark, a.sf_dir).collect())
     finally:
         spark.stop()
     print_profile(read_stages(log_dir), tr.groups[cold:])
+    print_jobs(read_jobs(log_dir, since_ms))
     shutil.rmtree(work, ignore_errors=True)
 
 

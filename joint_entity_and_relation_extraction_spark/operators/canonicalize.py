@@ -44,9 +44,12 @@ def connected_components(edges: DataFrame) -> DataFrame:
     (property-tested). The dispatch decision is a distributed count() —
     never a collect — so a too-big edge set costs one cheap aggregate
     instead of funnelling 2M+ rows through one task into driver memory
-    (round-1 probe); the eager-false localCheckpoint makes the count and
-    the following collect share one lineage evaluation instead of
-    recomputing the upstream resolution twice (ADVICE r02)."""
+    (round-1 probe); the localCheckpoint makes the count and the
+    following collect share one lineage evaluation instead of
+    recomputing the upstream resolution twice (ADVICE r02). It is
+    ``eager=False`` but not lazy: under AQE the call runs every shuffle
+    and broadcast stage of the edges' plan, and only the final stage
+    waits for the count."""
     edges = edges.localCheckpoint(eager=False)
     if edges.count() <= DRIVER_CC_MAX_EDGES:
         return _driver_union_find(edges.sparkSession, edges.collect())

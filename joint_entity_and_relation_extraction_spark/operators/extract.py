@@ -13,7 +13,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, StringType,
                                StructField, StructType)
@@ -142,29 +142,73 @@ INFERRED_DISTINCT_SCHEMA = StructType([
 ])
 
 
+def len_bucket(tokens: Column) -> Column:
+    """The model's length bucket of a token array: the smallest
+    ``model.LEN_BUCKETS`` bound >= its size, the largest bound past it
+    (``model._bucket_len``; the kernel truncates longer sentences). The
+    literals are the bucket bounds only, so the generated code is the
+    same for every input."""
+    from ..functions import model as M
+
+    size = F.size(tokens)
+    bucket = F.when(size <= M.LEN_BUCKETS[0], M.LEN_BUCKETS[0])
+    for b in M.LEN_BUCKETS[1:-1]:
+        bucket = bucket.when(size <= b, b)
+    return bucket.otherwise(M.LEN_BUCKETS[-1])
+
+
+def model_input(distinct: DataFrame, rows: int, cap: int) -> DataFrame:
+    """Layout of the model stage's input ``distinct`` (a ``tokens``
+    column, ``rows`` rows): range-partitioned on (length bucket,
+    xxhash64(tokens)) into at most ``cap`` partitions of a whole number
+    of BATCH_ROWS chunks each: ceil(rows / BATCH_ROWS) partitions of one
+    chunk while that fits under ``cap``, else the fewest chunks per
+    partition that do.
+
+    The kernel pads every length bucket of every Arrow batch to whole
+    chunks, so a partition costs the chunks of the buckets it holds.
+    Sorted by bucket, each bucket spans a run of neighbouring partitions,
+    so the layout computes at most sum_b ceil(rows_b / BATCH_ROWS) + n - 1
+    chunks; hash-spreading the same rows pads every bucket in every
+    partition.
+
+    The range exchange is REPARTITION_BY_NUM, whose width AQE keeps; an
+    exchange AQE may coalesce by bytes ran the whole model stage as one
+    7 s task (the rows are ~100 bytes but ~0.7 ms of model CPU each).
+    """
+    from ..functions import model as M
+
+    per_part = max(-(-rows // (cap * M.BATCH_ROWS)), 1) * M.BATCH_ROWS
+    n = max(-(-rows // per_part), 1)
+    return distinct.repartitionByRange(
+        n, len_bucket(F.col("tokens")), F.xxhash64("tokens"))
+
+
 def infer_distinct(sentences: DataFrame,
                    num_partitions: int | None = None) -> DataFrame:
     """THE expensive stage: model inference over the DISTINCT token
     sequences of the sentence stream → (tokens, mentions, relations).
 
-    Lazily localCheckpointed: the result is dictionary-sized relative to
-    the stream (web text repeats boilerplate sentences heavily) but its
-    lineage holds the model stage — every consumer (the stream join-back
-    in infer(), surface extraction, multiple queries) reuses one
-    materialization instead of re-running inference.
+    The distinct tokens are checkpointed eagerly, with an Observation
+    that counts their rows in the same job; that count sizes the model
+    input (:func:`model_input`, at most ``num_partitions`` partitions,
+    default 2 x defaultParallelism), and the range exchange samples the
+    checkpoint, never the sentence lineage.
+
+    The result is dictionary-sized relative to the stream (web text
+    repeats boilerplate sentences heavily) and localCheckpointed, so
+    every consumer (the stream join-back in infer(), surface extraction,
+    multiple queries) reuses one model pass. ``localCheckpoint(eager=False)``
+    is not free under AQE: the call runs every shuffle stage of the plan
+    (here the range sample and the model input's shuffle), and only the
+    final model stage waits for the first action.
     """
-    n = num_partitions or 2 * sentences.sparkSession.sparkContext.defaultParallelism
-    # repartition on xxhash64(tokens), NOT tokens: repartition(n, tokens)
-    # has the same expression as the dropDuplicates aggregate's required
-    # distribution, so Catalyst collapses it into the aggregate's
-    # ENSURE_REQUIREMENTS exchange — which AQE then coalesces by BYTE size
-    # to one partition (the rows are ~100 bytes but ~0.7ms of model CPU
-    # each; measured: the whole model stage ran as a single 7s task). A
-    # distinct expression keeps this a REPARTITION_BY_NUM exchange, whose
-    # user-specified width AQE preserves.
+    cap = num_partitions or 2 * sentences.sparkSession.sparkContext.defaultParallelism
+    rows = Observation()
     distinct = (sentences.select("tokens").dropDuplicates(["tokens"])
-                .repartition(n, F.xxhash64("tokens")))
-    return distinct.mapInPandas(
+                .observe(rows, F.count(F.lit(1)).alias("rows"))
+                .localCheckpoint(eager=True))
+    return model_input(distinct, rows.get["rows"], cap).mapInPandas(
         _infer_batches,
         schema=INFERRED_DISTINCT_SCHEMA).localCheckpoint(eager=False)
 

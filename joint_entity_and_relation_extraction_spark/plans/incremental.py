@@ -15,7 +15,7 @@ batch usually touches all of them, so today that set is most of the table.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import iceberglite as il
@@ -64,11 +64,16 @@ def _combine(existing: DataFrame, delta: DataFrame) -> DataFrame:
                          "sources")
 
 
-def _materialized_delta(new_canon_with_ts: DataFrame) -> DataFrame:
-    """The batch's G1 delta, evaluated once: it feeds both the ``preds``
-    collect and the write, and each evaluation would rerun the batch's
+def _materialized_delta(new_canon_with_ts: DataFrame) -> tuple[DataFrame, list[str]]:
+    """The batch's G1 delta, evaluated once, and the preds it holds. The
+    preds are observed in the checkpoint's own job instead of a distinct
+    collect; a second evaluation of the delta would rerun the batch's
     chain tail and timestamp scan (CLAUDE.md shared-subtree invariant)."""
-    return aggregate_triples(new_canon_with_ts).localCheckpoint(eager=True)
+    preds = Observation()
+    delta = (aggregate_triples(new_canon_with_ts)
+             .observe(preds, F.collect_set("pred").alias("preds"))
+             .localCheckpoint(eager=True))
+    return delta, sorted(preds.get["preds"])
 
 
 def merge_triple_evidence(spark: SparkSession, table_root: str,
@@ -84,8 +89,7 @@ def merge_triple_evidence(spark: SparkSession, table_root: str,
     them all and rewrites the whole table. The combine shuffles on
     (subj, pred, obj), which no table layout matches.
     """
-    delta = _materialized_delta(new_canon_with_ts)
-    preds = [r.pred for r in delta.select("pred").distinct().collect()]
+    delta, preds = _materialized_delta(new_canon_with_ts)
     if not preds:
         return delta
     if il.exists(table_root):

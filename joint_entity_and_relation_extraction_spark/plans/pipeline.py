@@ -49,9 +49,11 @@ class KGStages:
     the canonical map both consume it). Persisted frames are appended to
     ``held``; the owner unpersists them when done.
 
-    Building ``labels`` runs connected_components' dispatch count and
-    collect, which executes the distinct-sentence model, linking and CC;
-    every other frame stays lazy until its consumer runs an action.
+    Building ``infd`` runs the distinct-token checkpoint job and the
+    model input's range sample and shuffle; building ``labels`` runs
+    connected_components' dispatch count and collect, which executes the
+    model, linking and CC. Every other frame stays lazy until its
+    consumer runs an action.
 
     A frame assigned before its first access replaces that stage:
     run_pipeline sets ``ext`` to the committed extracted table, so a

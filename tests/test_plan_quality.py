@@ -199,32 +199,77 @@ def test_broadcast_in_linking_plan(spark):
 def test_model_stage_is_not_serialized_by_aqe(spark):
     """Regression gates for the round-2 scaling bugs:
 
-    (a) the distinct-inference repartition must survive as a
-        REPARTITION_BY_NUM exchange — repartitioning on the dropDuplicates
-        key collapsed into the aggregate's ENSURE_REQUIREMENTS exchange,
-        which AQE then coalesced by bytes to ONE task for the CPU-heavy
-        model stage;
+    (a) the model input layout (``extract.model_input``, what
+        infer_distinct runs the model on) must be a REPARTITION_BY_NUM
+        exchange, even straight above the dropDuplicates aggregate: an
+        exchange on the dedup key collapsed into the aggregate's
+        ENSURE_REQUIREMENTS exchange, which AQE then coalesced by bytes
+        to ONE task for the CPU-heavy model stage;
     (b) after execution, the model stage must actually have run with >1
         partition.
     """
     from joint_entity_and_relation_extraction_spark.operators import extract as X
     from joint_entity_and_relation_extraction_spark.operators.webpages import web_pages
 
-    from joint_entity_and_relation_extraction_spark.operators.extract import (
-        INFERRED_DISTINCT_SCHEMA, _infer_batches)
-
     wp = web_pages(spark, SF001)
     sents = X.split_sentences(X.lang_filter(X.extract_text(wp)))
     # (a) on the pre-checkpoint plan (infer_distinct returns the
     # checkpointed frame whose plan is an opaque ExistingRDD scan)
-    pre = (sents.select("tokens").dropDuplicates(["tokens"])
-           .repartition(8, F.xxhash64("tokens"))
-           .mapInPandas(_infer_batches, schema=INFERRED_DISTINCT_SCHEMA))
-    assert "REPARTITION_BY_NUM" in plan_str(pre), plan_str(pre)[:2000]
+    pre = (X.model_input(sents.select("tokens").dropDuplicates(["tokens"]),
+                         rows=10**6, cap=8)
+           .mapInPandas(X._infer_batches, schema=X.INFERRED_DISTINCT_SCHEMA))
+    p = plan_str(pre)
+    assert "rangepartitioning" in p and "REPARTITION_BY_NUM" in p, p[:2000]
     # (b) behavioral: the materialized model stage is actually parallel
     infd = X.infer_distinct(sents, num_partitions=8)
     assert infd.count() > 0
     assert infd.rdd.getNumPartitions() > 1
+
+
+def test_len_bucket_matches_model(spark):
+    """The Spark length-bucket column is the kernel's own bucket rule."""
+    from joint_entity_and_relation_extraction_spark.functions import model as M
+    from joint_entity_and_relation_extraction_spark.operators import extract as X
+
+    sizes = list(range(M.LEN_BUCKETS[-1] + 8))
+    df = spark.createDataFrame([(["t"] * k,) for k in sizes], "tokens array<string>")
+    got = [r[0] for r in df.select(X.len_bucket(F.col("tokens"))).collect()]
+    assert got == [M._bucket_len(k) for k in sizes]
+
+
+@pytest.mark.parametrize("cap", [8, 16])
+def test_model_input_fills_padded_chunks(spark, cap):
+    """The model pads each length bucket of each Arrow batch to whole
+    BATCH_ROWS chunks. On the sf0.01 distinct sentences the model input
+    layout computes at most sum_b ceil(c_b / 128) + n - 1 chunks (c_b the
+    bucket's rows, n the partitions), and fewer than hash-spreading the
+    same rows over the cap. Its 1070 rows are 9 chunks' worth: under a
+    cap of 16 the layout holds one chunk a partition, under 8 two."""
+    from joint_entity_and_relation_extraction_spark.functions.model import BATCH_ROWS
+    from joint_entity_and_relation_extraction_spark.operators import extract as X
+    from joint_entity_and_relation_extraction_spark.operators.webpages import web_pages
+
+    def chunks(counts) -> int:
+        return sum(-(-c // BATCH_ROWS) for c in counts)
+
+    def layout_chunks(df) -> int:
+        return chunks(r["count"] for r in df.groupBy(
+            F.spark_partition_id(), X.len_bucket(F.col("tokens"))).count().collect())
+
+    wp = web_pages(spark, SF001)
+    sents = X.split_sentences(X.lang_filter(X.extract_text(wp)))
+    distinct = (sents.select("tokens").dropDuplicates(["tokens"])
+                .localCheckpoint())
+    per_bucket = [r["count"] for r in distinct.groupBy(
+        X.len_bucket(F.col("tokens"))).count().collect()]
+    rows = sum(per_bucket)
+    ranged = X.model_input(distinct, rows, cap)
+    n = ranged.rdd.getNumPartitions()
+    assert 1 < n <= cap
+    got = layout_chunks(ranged)
+    assert got <= chunks(per_bucket) + n - 1, (got, per_bucket, n)
+    hashed = layout_chunks(distinct.repartition(cap, F.xxhash64("tokens")))
+    assert got < hashed, (got, hashed)
 
 
 def test_replication_expands_after_scan_repartition(spark):
