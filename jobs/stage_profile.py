@@ -1,12 +1,16 @@
 #!/usr/bin/env python
-"""Per-stage profile of one registry query or one perfbench round, read
-offline from the Spark event log.
+"""Per-stage profile of registry queries or one perfbench round, read
+offline from the Spark event log; also the plan dump and repeat timer.
 
-    python jobs/stage_profile.py --query dedup_edit_verify \\
-        [--sf-dir /root/testdata/sf0.01]
+    python jobs/stage_profile.py --query dedup_edit_verify,graph_degrees \\
+        [--sf-dir /root/testdata/sf0.01] [--repeats 3]
     python jobs/stage_profile.py --workload crawl_neardup --seed 101
+    python jobs/stage_profile.py --plans --query filter_pushdown,tpch_q3
 
-A query runs twice, cold then profiled. A workload generates its inputs
+Each query runs cold, then profiled, then (``--repeats N``) N more
+times for wall timing outside the printed profile. Every run writes to
+the ``noop`` sink, which computes every column as ``collect()`` would
+but sends no rows to the driver. A workload generates its inputs
 from the seed, runs one untimed warm-up unit and then one profiled unit,
 every layer call of which gets its own job group; nothing else in the
 unit changes (no barriers, no traced-only counts), so a lazy layer's
@@ -18,7 +22,13 @@ stage's executor CPU ms, and the shuffle records it read and wrote.
 Skipped stages (shuffle output reused) print nothing. Then one line per
 job of the profiled run, in submission order: its group, its wall in ms
 and the gap in ms since the jobs before it had all ended. The gaps are
-time no job ran, mostly query planning between actions.
+time no job ran, mostly query planning between actions. ``--repeats``
+then prints one JSON line: each query's timed runs in seconds and their
+median.
+
+``--plans`` runs nothing but the plan build and prints each query's
+``explain("formatted")`` as a ``## <name>`` section with a fenced block,
+the body of ``BENCH/PLANS.md``.
 
 A stage whose largest task is close to its whole CPU time is serial or
 skewed; a stage whose records written dwarf its input is an expansion
@@ -34,6 +44,7 @@ import glob
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 from collections import defaultdict
@@ -43,6 +54,7 @@ _BENCH = os.path.join(_REPO, "perfbench")
 sys.path[:0] = [_REPO, _BENCH]
 
 BETWEEN = "between"
+TIMED = "timed"
 
 
 class JobGroups:
@@ -167,14 +179,43 @@ def print_profile(by_group: dict[str, list[dict]], groups: list[str]) -> None:
                   f"{r['records_written']:>16}  {r['name'][:60]}")
 
 
+def noop(df) -> None:
+    """Run ``df`` to the noop sink: every column computed, no rows kept."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def print_plan(name: str, df) -> None:
+    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df._jdf.queryExecution(), "formatted")
+    print(f"\n## {name}\n\n```\n{plan.strip()}\n```")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     what = ap.add_mutually_exclusive_group(required=True)
-    what.add_argument("--query", help="a registered or pending query name")
+    what.add_argument("--query",
+                      help="comma-separated registered or pending query names")
     what.add_argument("--workload", help="a perfbench workload name")
     ap.add_argument("--seed", type=int, default=101)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
+    ap.add_argument("--plans", action="store_true",
+                    help="print only each query's explain('formatted')")
+    ap.add_argument("--repeats", type=int, default=0,
+                    help="time N more runs per query after the profiled one")
     a = ap.parse_args()
+    if a.workload and (a.plans or a.repeats):
+        ap.error("--plans and --repeats take --query")
+    if a.plans and a.repeats:
+        ap.error("--plans and --repeats exclude each other")
+
+    from joint_entity_and_relation_extraction_spark.plans import registry
+    from joint_entity_and_relation_extraction_spark.session import build_session
+
+    queries = {**registry.PENDING_QUERIES, **registry.all_queries()}
+    names = a.query.split(",") if a.query else []
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        ap.error(f"unknown queries: {','.join(unknown)}")
 
     work = os.path.join(_REPO, ".perfbench", "stage_profile")
     shutil.rmtree(work, ignore_errors=True)
@@ -183,9 +224,6 @@ def main() -> None:
     os.makedirs(os.path.join(work, "tmp"))
     os.environ.update(SPARK_LOCAL_DIRS=os.path.join(work, "spark-local"),
                       TMPDIR=os.path.join(work, "tmp"))
-
-    from joint_entity_and_relation_extraction_spark.plans import registry
-    from joint_entity_and_relation_extraction_spark.session import build_session
 
     conf = {"spark.ui.showConsoleProgress": "false",
             "spark.eventLog.enabled": "true",
@@ -201,6 +239,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tr = JobGroups(spark.sparkContext)
     cold, since_ms = 0, 0
+    runs: dict[str, list[float]] = {}
     try:
         if a.workload:
             wl.start(spark)
@@ -208,16 +247,31 @@ def main() -> None:
             cold = len(tr.groups)
             since_ms = int(time.time() * 1000)
             wl.run_unit(spark, tr, 1)
+        elif a.plans:
+            for name in names:
+                print_plan(name, queries[name](spark, a.sf_dir))
         else:
-            queries = {**registry.PENDING_QUERIES, **registry.all_queries()}
-            fn = queries[a.query]
-            fn(spark, a.sf_dir).collect()  # cold run, not printed
+            for name in names:  # cold runs, not printed
+                noop(queries[name](spark, a.sf_dir))
             since_ms = int(time.time() * 1000)
-            tr.layer(a.query, lambda: fn(spark, a.sf_dir).collect())
+            for name in names:
+                tr.layer(name, lambda: noop(queries[name](spark, a.sf_dir)))
+            spark.sparkContext.setJobGroup(TIMED, "timed repeats")
+            for name in names:
+                for _ in range(a.repeats):
+                    t0 = time.monotonic()
+                    noop(queries[name](spark, a.sf_dir))
+                    runs.setdefault(name, []).append(
+                        round(time.monotonic() - t0, 3))
     finally:
         spark.stop()
-    print_profile(read_stages(log_dir), tr.groups[cold:])
-    print_jobs(read_jobs(log_dir, since_ms))
+    if not a.plans:
+        print_profile(read_stages(log_dir), tr.groups[cold:])
+        print_jobs([j for j in read_jobs(log_dir, since_ms)
+                    if j["group"] != TIMED])
+    if runs:
+        print(json.dumps({"sf_dir": a.sf_dir, "runs": runs, "median": {
+            n: round(statistics.median(r), 3) for n, r in runs.items()}}))
     shutil.rmtree(work, ignore_errors=True)
 
 

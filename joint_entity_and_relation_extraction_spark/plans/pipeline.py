@@ -42,12 +42,18 @@ class KGStages:
     """The KG chain as named lazy frames, each built on first access from
     the frames before it (see the module diagram).
 
-    This is where the chain's materialization choices live, and the only
-    place: ``sents`` is persisted (the distinct-sentence model and the
-    stream join-back both consume it), ``infd`` is localCheckpointed inside
-    ``infer_distinct``, and ``resolution`` is persisted (the CC edges and
-    the canonical map both consume it). Persisted frames are appended to
-    ``held``; the owner unpersists them when done.
+    It persists two frames: ``sents`` (the distinct-sentence model and
+    the stream join-back both consume it) and ``resolution`` (the CC
+    edges and the canonical map both consume it). Persisted frames are
+    appended to ``held``; the owner unpersists them when done. The
+    operators checkpoint their own intermediates, so a chain composed
+    from them directly (perfbench's ``chain.py``) gets the same
+    materializations: ``infer_distinct`` checkpoints the distinct
+    tokens (eager) and the model output (lazy), ``resolve_surfaces`` its
+    surface input, ``connected_components`` its edges,
+    ``canonical_triples_by_surface`` its raw-surface map, and
+    ``incremental.merge_triple_evidence`` (not part of this graph) the
+    batch's delta.
 
     Building ``infd`` runs the distinct-token checkpoint job and the
     model input's range sample and shuffle; building ``labels`` runs

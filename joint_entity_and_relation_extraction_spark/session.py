@@ -52,8 +52,9 @@ def build_session(
         # with the full generator expression and pushed below the
         # repartition — so the shingle/gram/bigram projections ran 3x
         # per doc, at FILE-granular parallelism (the testdata parquet is
-        # 1-2 files). Measured r08 (bench_extra, sf0.1, noop): the ngram
-        # shingle explode alone 2.28s -> 0.06s once the guard is gone.
+        # 1-2 files). Measured r08 (sf0.1, noop sink; OPTIMIZATION_r08.md
+        # §9): the ngram shingle explode alone 2.28s -> 0.28s once the
+        # guard is gone.
         # The filters are semantically redundant for explode/posexplode
         # (a generator emits nothing for null/empty input), so results
         # are bit-identical; the rule only helps when the generator

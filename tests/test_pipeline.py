@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from joint_entity_and_relation_extraction_spark.operators import linking as L
+from joint_entity_and_relation_extraction_spark.operators.lineage import lineage_rows
 from joint_entity_and_relation_extraction_spark.operators.webpages import web_pages
 from joint_entity_and_relation_extraction_spark.plans import registry
 from joint_entity_and_relation_extraction_spark.plans.pipeline import (
@@ -111,6 +112,23 @@ def test_repeated_kg_pass_compiles_no_new_classes(spark):
         for df in g.held:
             df.unpersist()
     assert rows[0] == rows[1] and len(rows[0]) > 1000
+    assert new_compiles[1] == 0, new_compiles
+
+
+def test_lineage_rows_put_no_run_values_into_codegen(spark):
+    """A second lineage_rows pass with another wall time compiles no new
+    class: the wall time and the attempted_at timestamp arrive as data,
+    not as literals inlined into the generated Java source (each value
+    was 2 new classes per call when both were literals)."""
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    df = spark.range(1000).withColumn("lang", (F.col("id") % 5).cast("string"))
+    new_compiles = []
+    for wall_ms in (17, 23):
+        before = compiles.getCount()
+        rows = lineage_rows(df, "r1", "extract", F.col("lang"), wall_ms).collect()
+        new_compiles.append(compiles.getCount() - before)
+        assert len(rows) == 5 and {r.wall_ms for r in rows} == {wall_ms}
     assert new_compiles[1] == 0, new_compiles
 
 def test_resume_noop_skips_everything(spark, first_run):
