@@ -194,11 +194,13 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
 
 
 def resolution_edges(resolution: DataFrame) -> DataFrame:
-    """C1: same-entity evidence edges (surface_node ↔ entity) for every
+    """C1: same-entity evidence edges (surface_node → entity) for every
     linked surface, from the resolution table alone — edges are
-    per-surface facts, so the mention stream is never read. Ambiguous
-    aliases connect their entities through the shared surface node,
-    which canonicalization then merges."""
+    per-surface facts, so the mention stream is never read.
+    resolve_surfaces keeps only the top-1 entity per surface
+    (_best_alias), so each surface node has at most one edge: the graph
+    is a forest of stars, one per linked entity, and no edge joins two
+    entities (tests/test_linking.py pins this)."""
     return (
         resolution.filter(F.col("entity_id").isNotNull())
         .select(F.col("surface_node").alias("src"),

@@ -271,7 +271,15 @@ def ann_ivf(spark: SparkSession, sf_dir: str, n_queries: int = 8,
     base = read_table(spark, sf_dir, "embeddings")
     e = _with_norm(base).withColumn(
         "list_id", _assign_udf(cent)(F.col("embedding")))
-    # per-query probe lists, computed on the driver-sized centroid matrix
+    return _ivf_rerank(spark, base, e,
+                       _probe_lists(base, cent, n_queries, nprobe),
+                       n_queries, k)
+
+
+def _probe_lists(base: DataFrame, cent: np.ndarray, n_queries: int,
+                 nprobe: int) -> list[tuple[int, int]]:
+    """(qid, list_id) for each query's nprobe nearest centroids by
+    cosine, computed on the driver-sized centroid matrix."""
     qrows = (base.select("vec_id", "embedding")
              .orderBy("vec_id").limit(n_queries).collect())
     probe_rows = []
@@ -281,12 +289,24 @@ def ann_ivf(spark: SparkSession, sf_dir: str, n_queries: int = 8,
         sims = (cent @ qv) / (cnorm * np.sqrt(qv @ qv) + 1e-12)
         for lid in np.argsort(-sims)[:nprobe]:
             probe_rows.append((r.vec_id, int(lid)))
+    return probe_rows
+
+
+def _ivf_rerank(spark: SparkSession, base: DataFrame, e: DataFrame,
+                probe_rows: list[tuple[int, int]], n_queries: int,
+                k: int) -> DataFrame:
+    """Exact cosine top-k of each query over the vectors ``e`` (with
+    norm and list_id) in its probed lists: broadcast probe and query
+    frames, equi-join on list_id, rank on the rounded cosine with nid
+    tie-break."""
     probes = F.broadcast(spark.createDataFrame(
         probe_rows, "qid long, list_id long"))
     q = F.broadcast(
-        e.join(F.broadcast(_query_ids(base, n_queries)), "vec_id").select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"),
-            F.col("norm").alias("qnorm")))
+        _with_norm(base)
+        .join(F.broadcast(_query_ids(base, n_queries)), "vec_id")
+        .select(F.col("vec_id").alias("qid"),
+                F.col("embedding").alias("qe"),
+                F.col("norm").alias("qnorm")))
     cand = (e.join(probes, "list_id").join(q, "qid")
             .filter(F.col("qid") != F.col("vec_id")))
     cos = F.round(_dot(F.col("qe"), F.col("embedding"))
@@ -318,8 +338,6 @@ def ivf_build_index(spark: SparkSession, sf_dir: str, index_root: str,
     append-path parity tests use this); ``vectors`` builds over an
     explicit (vec_id, embedding, ...) frame instead of the sf_dir table
     (training then runs on that frame)."""
-    from ..sources import iceberglite as il
-
     base = (vectors if vectors is not None
             else read_table(spark, sf_dir, "embeddings"))
     cent = centroids
@@ -329,14 +347,24 @@ def ivf_build_index(spark: SparkSession, sf_dir: str, index_root: str,
                 if vectors is not None
                 else ivf_centroids(spark, sf_dir, nlist=nlist, iters=iters,
                                    train_fraction=train_fraction))
-    e = _with_norm(base).withColumn(
+    _write_index(spark, base, cent, index_root)
+    return cent
+
+
+def _write_index(spark: SparkSession, vectors: DataFrame, cent: np.ndarray,
+                 index_root: str) -> None:
+    """Assign each vector its nearest centroid's list_id, append the
+    vectors (with norms) partitioned by list_id, and commit the centroid
+    matrix as the ``-centroids`` companion table."""
+    from ..sources import iceberglite as il
+
+    e = _with_norm(vectors).withColumn(
         "list_id", _assign_udf(cent)(F.col("embedding")))
     il.append(e, index_root, ["list_id"])
     cdf = spark.createDataFrame(
         [(int(i), [float(x) for x in row]) for i, row in enumerate(cent)],
         "list_id int, centroid array<double>")
     il.append(cdf, index_root + "-centroids", [])
-    return cent
 
 
 def _load_centroids(spark: SparkSession, index_root: str) -> np.ndarray:
@@ -411,15 +439,10 @@ def ivf_recluster(spark: SparkSession, index_root: str, new_root: str,
     during a rebuild). Returns the new centroid matrix."""
     from ..sources import iceberglite as il
 
-    vecs = il.read(spark, index_root).select("vec_id", "embedding")
-    cent = _kmeans(vecs, nlist=nlist, iters=iters)
-    e = (_with_norm(il.read(spark, index_root).drop("list_id", "norm"))
-         .withColumn("list_id", _assign_udf(cent)(F.col("embedding"))))
-    il.append(e, new_root, ["list_id"])
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in row]) for i, row in enumerate(cent)],
-        "list_id int, centroid array<double>")
-    il.append(cdf, new_root + "-centroids", [])
+    vecs = il.read(spark, index_root).drop("list_id", "norm")
+    cent = _kmeans(vecs.select("vec_id", "embedding"), nlist=nlist,
+                   iters=iters)
+    _write_index(spark, vecs, cent, new_root)
     return cent
 
 
@@ -437,34 +460,8 @@ def ann_ivf_persisted(spark: SparkSession, sf_dir: str, index_root: str,
 
     cent = _load_centroids(spark, index_root)
     base = read_table(spark, sf_dir, "embeddings")
-    qrows = (base.select("vec_id", "embedding")
-             .orderBy("vec_id").limit(n_queries).collect())
-    probe_rows = []
-    cnorm = np.sqrt((cent * cent).sum(axis=1))
-    for r in qrows:
-        qv = np.asarray(r.embedding, dtype=np.float64)
-        sims = (cent @ qv) / (cnorm * np.sqrt(qv @ qv) + 1e-12)
-        for lid in np.argsort(-sims)[:nprobe]:
-            probe_rows.append((r.vec_id, int(lid)))
+    probe_rows = _probe_lists(base, cent, n_queries, nprobe)
     probed_lists = sorted({lid for _, lid in probe_rows})
     # manifest pruning happens HERE: non-probed lists are never listed
     e = il.read(spark, index_root, where={"list_id": probed_lists})
-    spark_ = spark
-    probes = F.broadcast(spark_.createDataFrame(
-        probe_rows, "qid long, list_id long"))
-    q = F.broadcast(
-        _with_norm(base)
-        .join(F.broadcast(_query_ids(base, n_queries)), "vec_id")
-        .select(F.col("vec_id").alias("qid"),
-                F.col("embedding").alias("qe"),
-                F.col("norm").alias("qnorm")))
-    cand = (e.join(probes, "list_id").join(q, "qid")
-            .filter(F.col("qid") != F.col("vec_id")))
-    cos = F.round(_dot(F.col("qe"), F.col("embedding"))
-                  / (F.col("qnorm") * F.col("norm")), 6)
-    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nid"))
-    return (
-        cand.select("qid", F.col("vec_id").alias("nid"), cos.alias("cos"))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _ivf_rerank(spark, base, e, probe_rows, n_queries, k)

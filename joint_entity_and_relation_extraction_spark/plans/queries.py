@@ -473,33 +473,6 @@ SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
 
 # --- scalar function families ----------------------------------------------
 
-def q_string_funcs(spark, sf):
-    c = read_table(spark, sf, "customer")
-    return c.select(
-        "c_custkey",
-        F.lower("c_name").alias("lname"),
-        F.upper("c_mktsegment").alias("useg"),
-        F.substring("c_name", 1, 10).alias("prefix10"),
-        F.concat_ws("-", "c_mktsegment", F.col("c_nationkey").cast("string")).alias("seg_nat"),
-        F.regexp_extract("c_name", r"(\d+)", 1).alias("digits"),
-        F.length("c_name").cast("bigint").alias("name_len"),
-        F.levenshtein(F.lit("Customer#000000000"), F.col("c_name")).cast("bigint").alias("lev"),
-        F.trim(F.lit("  x  ")).alias("trimmed"),
-    )
-
-
-SQL_STRING_FUNCS = r"""
-SELECT c_custkey, LOWER(c_name) AS lname, UPPER(c_mktsegment) AS useg,
-       SUBSTRING(c_name, 1, 10) AS prefix10,
-       CONCAT_WS('-', c_mktsegment, CAST(c_nationkey AS VARCHAR)) AS seg_nat,
-       REGEXP_EXTRACT(c_name, '(\d+)', 1) AS digits,
-       CAST(LENGTH(c_name) AS BIGINT) AS name_len,
-       CAST(LEVENSHTEIN('Customer#000000000', c_name) AS BIGINT) AS lev,
-       TRIM('  x  ') AS trimmed
-FROM customer
-"""
-
-
 def q_date_funcs(spark, sf):
     li = read_table(spark, sf, "lineitem")
     return li.select(
@@ -522,34 +495,6 @@ SELECT l_orderkey, l_linenumber,
        CAST(DATEDIFF('day', DATE '1995-01-01', CAST(l_shipdate AS DATE)) AS BIGINT)
          AS days_since_95
 FROM lineitem
-"""
-
-
-def q_math_funcs(spark, sf):
-    o = read_table(spark, sf, "orders")
-    return o.select(
-        "o_orderkey",
-        F.round("o_totalprice", 1).alias("price_r1"),
-        F.abs(F.col("o_totalprice") - 100000).alias("abs_diff"),
-        F.sqrt("o_totalprice").alias("price_sqrt"),
-        F.pow(F.lit(2.0), (F.col("o_orderkey") % 10).cast("double")).alias("pow2"),
-        F.floor("o_totalprice").cast("bigint").alias("price_floor"),
-        F.ceil("o_totalprice").cast("bigint").alias("price_ceil"),
-        (F.col("o_orderkey") % 7).alias("mod7"),
-        F.col("o_totalprice").cast("decimal(14,2)").cast("string").alias("price_dec"),
-    )
-
-
-SQL_MATH_FUNCS = """
-SELECT o_orderkey, ROUND(o_totalprice, 1) AS price_r1,
-       ABS(o_totalprice - 100000) AS abs_diff,
-       SQRT(o_totalprice) AS price_sqrt,
-       POW(2.0, CAST(o_orderkey % 10 AS DOUBLE)) AS pow2,
-       CAST(FLOOR(o_totalprice) AS BIGINT) AS price_floor,
-       CAST(CEIL(o_totalprice) AS BIGINT) AS price_ceil,
-       o_orderkey % 7 AS mod7,
-       CAST(CAST(o_totalprice AS DECIMAL(14,2)) AS VARCHAR) AS price_dec
-FROM orders
 """
 
 
@@ -807,7 +752,7 @@ FROM lineitem GROUP BY l_returnflag
 
 
 # --- round-2 additions: as-of agg form, streaming-as-batch, salted join,
-#     IcebergLite snapshot pin, python UDTF (VERDICT.md items 7/9/10) ------
+#     IcebergLite snapshot pin (VERDICT.md items 7/9/10) --------------------
 
 
 def q_join_asof_agg(spark, sf):
@@ -1284,40 +1229,6 @@ SELECT user_id, event_type, ts AS effective_from,
                       ORDER BY ts, event_id) IS NULL AS is_current
 FROM chg
 WHERE prev_type IS NULL OR event_type <> prev_type
-"""
-
-
-def q_udtf_word_pos(spark, sf):
-    """Python UDTF (SURVEY.md §2.5 row closed — Spark 4 F.udtf): a
-    table function emitting (pos, word) for a document's first 5 words,
-    applied per row via LATERAL join. UDTFs are row-at-a-time python —
-    correct for API coverage, NOT a hot-path pattern (the engine's hot
-    paths are Arrow-vectorized; see operators/extract.py)."""
-    from pyspark.sql.functions import udtf
-
-    class _WordPos:
-        def eval(self, doc_id, text):
-            # `is not None` (not truthiness): DuckDB STRING_SPLIT('')
-            # yields [''], so an empty string must emit one empty word
-            words = text.split(" ") if text is not None else []
-            for i, w in enumerate(words[:5]):
-                yield doc_id, i + 1, w
-
-    word_pos = udtf(_WordPos, returnType="doc_id bigint, pos bigint, word string")
-    spark.udtf.register("word_pos", word_pos)
-    read_table(spark, sf, "documents").createOrReplaceTempView("jers_docs")
-    return spark.sql(
-        "SELECT t.doc_id, t.pos, t.word "
-        "FROM jers_docs, LATERAL word_pos(doc_id, text) t")
-
-
-SQL_UDTF_WORD_POS = """
--- aligned UNNESTs zip in DuckDB; GENERATE_SERIES here is the list
--- function (lateral table-function form rejects column arguments)
-SELECT doc_id,
-       CAST(UNNEST(GENERATE_SERIES(1, LEN(w5))) AS BIGINT) AS pos,
-       UNNEST(w5) AS word
-FROM (SELECT doc_id, (STRING_SPLIT(text, ' '))[1:5] AS w5 FROM documents)
 """
 
 
@@ -1811,9 +1722,7 @@ RELATIONAL_QUERIES = {
     "set_intersect": q_set_intersect,
     "set_except": q_set_except,
     "distinct_rows": q_distinct_rows,
-    "string_funcs": q_string_funcs,
     "date_funcs": q_date_funcs,
-    "math_funcs": q_math_funcs,
     "array_funcs": q_array_funcs,
     "json_funcs": q_json_funcs,
     "explode_array": q_explode_array,
@@ -1830,7 +1739,6 @@ RELATIONAL_QUERIES = {
     "stream_tumbling_batch": q_stream_tumbling_batch,
     "join_salted": q_join_salted,
     "iceberg_snapshot_scan": q_iceberg_snapshot_scan,
-    "udtf_word_pos": q_udtf_word_pos,
     "join_left": q_join_left,
     "join_full": q_join_full,
     "join_semi": q_join_semi,
@@ -1879,9 +1787,7 @@ RELATIONAL_ORACLE = {
     "set_intersect": SQL_SET_INTERSECT,
     "set_except": SQL_SET_EXCEPT,
     "distinct_rows": SQL_DISTINCT_ROWS,
-    "string_funcs": SQL_STRING_FUNCS,
     "date_funcs": SQL_DATE_FUNCS,
-    "math_funcs": SQL_MATH_FUNCS,
     "array_funcs": SQL_ARRAY_FUNCS,
     "json_funcs": SQL_JSON_FUNCS,
     "explode_array": SQL_EXPLODE_ARRAY,
@@ -1898,7 +1804,6 @@ RELATIONAL_ORACLE = {
     "stream_tumbling_batch": SQL_STREAM_TUMBLING_BATCH,
     "join_salted": SQL_JOIN_SALTED,
     "iceberg_snapshot_scan": SQL_ICEBERG_SNAPSHOT_SCAN,
-    "udtf_word_pos": SQL_UDTF_WORD_POS,
     "unpivot_measures": SQL_UNPIVOT_MEASURES,
     "join_range_bucketed": SQL_JOIN_RANGE_BUCKETED,
     "higher_order_funcs": SQL_HIGHER_ORDER_FUNCS,

@@ -18,7 +18,6 @@ from ..operators import dedup as DD
 from ..operators import extract as X
 from ..operators import graph as GR
 from ..operators import linking as LK
-from ..operators import multimodal as MM
 from ..operators import pandas_ops as PO
 from ..operators import similarity as SIM
 from ..operators import textstats as TS
@@ -231,7 +230,7 @@ FROM g
 }
 
 
-# --- dedup / similarity / text analysis / multimodal ------------------------
+# --- dedup / similarity / text analysis -------------------------------------
 
 ANALYTICS_QUERIES = {
     "dedup_exact": DD.exact_dedup_groups,
@@ -253,10 +252,6 @@ ANALYTICS_QUERIES = {
     "dedup_winnow_pairs": partial(DD.winnow_pairs, k=5, w=8, min_common=2),
     "dedup_minhash_incremental": partial(DD.minhash_incremental_pairs,
                                          n=2, threshold=0.2),
-    "mm_binary_metadata": MM.binary_metadata,
-    "mm_media_features": MM.media_features,
-    "mm_frame_sample": MM.frame_sample,
-    "mm_audio_windows": MM.audio_windows,
     "grouped_map_sessionize": PO.sessionize_events,
     "udaf_weighted_avg": PO.weighted_avg_by_type,
     "curation_select": partial(CU.curation_select, frac=0.5),
@@ -294,7 +289,7 @@ ANALYTICS_ORACLE = {
     "dedup_keep_best": CU.sql_dedup_keep_best(n=2, threshold=0.2),
     "pack_sequences": CU.sql_pack_sequences(budget=2048),
     "dedup_embedding_clusters": DD.sql_embedding_clusters(threshold=0.3),
-    # minhash/simhash/lsh/langid_predict/mm_*: signature-based or
+    # minhash/simhash/lsh/langid_predict: signature-based or
     # model-backed — rows-only (plus pytest property gates on recall)
 }
 
@@ -496,27 +491,30 @@ PENDING_ORACLE: dict[str, str] = {
 DRIVER_WINDOW = 50
 
 # r09 rotation accounting. r08 kept r07's window, so CORRECTNESS_r08
-# repeats r07's 50 names and 77 registered queries hold no stamp from
-# r07/r08 (27 last checked r05, 50 last checked r06). Together with the
-# 18 staged queries that is 95 mandatory seats, so propose_next_window()
+# repeats r07's 50 names and 70 registered queries hold no stamp from
+# r07/r08 (23 last checked r05, 47 last checked r06). Together with the
+# 18 staged queries that is 88 mandatory seats, so propose_next_window()
 # raises for this round and cannot be copied verbatim. This window is
 # the planner's ordering applied by hand to the registered part of that
 # set: the 9 kg_* chain queries first (the paper's pipeline and its P/R
-# gate, kg_triple_metrics), then the other 20 r05-stamped queries, then
-# 21 r06-stamped ones oldest-stamp-first by name. 9 + 20 + 21 = 50.
+# gate, kg_triple_metrics), then the other 16 r05-stamped queries, then
+# 25 r06-stamped ones oldest-stamp-first by name. Four of those 25 sit
+# in the seats the retired mm_* stubs held: the first four by name of
+# the r06-stamped queries the window did not seat before (the
+# planner's filler order). 9 + 16 + 25 = 50.
 # The staged pool stays staged (it registers only with a seat). When
-# this window's artifact lands, 27 r06-stamped queries are past the
+# this window's artifact lands, 20 r06-stamped queries are past the
 # 3-round rule (tests/test_registry.py names them); the r10 planner
-# seats them with the 18 staged queries: 45 mandatory + 5 fillers.
+# seats them with the 18 staged queries: 38 mandatory + 12 fillers.
 WINDOW = [
     # the KG chain and its metrics gate
     "kg_canonical_triples", "kg_extract_text", "kg_links", "kg_mentions",
     "kg_sentences", "kg_triples_raw", "kg_web_pages",
     "kg_entity_pagerank", "kg_triple_metrics",
-    # last driver-checked in r05
+    # last driver-checked in r05 (plus four r06-stamped names, see above)
     "join_null_safe", "join_range_bucketed",
-    "mm_audio_windows", "mm_binary_metadata", "mm_frame_sample",
-    "mm_media_features", "pack_sequences", "pack_sequences_sharded",
+    "iceberg_zorder_scan", "join_asof_agg", "join_lateral",
+    "join_salted", "pack_sequences", "pack_sequences_sharded",
     "sample_stratified", "scan_project", "stream_session_batch",
     "text_fingerprint", "text_langid_predict", "text_langid_scores",
     "text_quality", "text_token_stats", "text_winnow_fingerprint",

@@ -419,10 +419,9 @@ def tws_domain_stats(pages: DataFrame) -> DataFrame:
     (the TWS driver-worker protocol dep), which this container lacks and
     cannot install (SURVEY.md §0.4) — the query-build path is exercised
     unconditionally and the end-to-end test runs wherever protobuf
-    exists (tests/test_streaming.py gates on the import, the same policy
-    as multimodal.decode_image_real). applyInPandasWithState
-    (:func:`stateful_domain_sessions`) is the fully-tested stateful path
-    in this sandbox.
+    exists (tests/test_streaming.py gates on the import).
+    applyInPandasWithState (:func:`stateful_domain_sessions`) is the
+    fully-tested stateful path in this sandbox.
     """
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (

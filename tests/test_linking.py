@@ -17,7 +17,7 @@ from joint_entity_and_relation_extraction_spark.operators.webpages import web_pa
 from joint_entity_and_relation_extraction_spark.plans.pipeline import kg_stages
 from oracle import pipeline_local as oracle
 
-from conftest import SF0001
+from conftest import SF0001, SF001
 
 
 @pytest.fixture(scope="module")
@@ -161,6 +161,25 @@ def test_canonical_triples_pr_gate(spark, oracle_full):
     assert precision >= 0.95 and recall >= 0.95, (precision, recall)
     assert precision == 1.0 and recall == 1.0
     assert got == want and len(got) > 100
+
+
+@pytest.mark.parametrize("sf", [SF0001, SF001])
+def test_resolution_edges_are_a_star_forest(spark, sf):
+    """resolve_surfaces keeps one entity per surface (_best_alias), so
+    the CC input graph is a forest of stars, one per linked entity: no
+    surface node (src) has two edges, and no entity (dst) is also a
+    surface node. resolution_edges' docstring and the canonical-id work
+    on linking rely on this shape."""
+    g = kg_stages(spark, web_pages(spark, sf), L.alias_dict(spark, sf))
+    try:
+        edges = L.resolution_edges(g.resolution).collect()
+    finally:
+        for df in g.held:
+            df.unpersist()
+    srcs = [e.src for e in edges]
+    assert len(srcs) > 10
+    assert len(set(srcs)) == len(srcs)
+    assert not set(srcs) & {e.dst for e in edges}
 
 
 def test_surface_feats_batch_matches_per_row_reference():

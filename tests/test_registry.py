@@ -71,8 +71,8 @@ EXPECTED_WINDOW_R09 = [
     "kg_sentences", "kg_triples_raw", "kg_web_pages",
     "kg_entity_pagerank", "kg_triple_metrics",
     "join_null_safe", "join_range_bucketed",
-    "mm_audio_windows", "mm_binary_metadata", "mm_frame_sample",
-    "mm_media_features", "pack_sequences", "pack_sequences_sharded",
+    "iceberg_zorder_scan", "join_asof_agg", "join_lateral",
+    "join_salted", "pack_sequences", "pack_sequences_sharded",
     "sample_stratified", "scan_project", "stream_session_batch",
     "text_fingerprint", "text_langid_predict", "text_langid_scores",
     "text_quality", "text_token_stats", "text_winnow_fingerprint",
